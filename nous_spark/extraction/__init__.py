@@ -1,1 +1,2 @@
-"""Vectorized extraction UDFs: html->text, identifier mentions, OIE triples."""
+"""Scalar extraction functions fused by pipeline.stage_extract: html->text,
+identifier mentions, OIE triples."""

@@ -3,8 +3,8 @@
 BASELINE.json's per-row invariant: the extracted ``text`` must be
 byte-identical per ``url`` across runs and parallelism levels. The
 extractor is a pure function of the html bytes (no randomness, no state,
-no locale dependence), applied via an Arrow-batched pandas UDF — never
-row-at-a-time Python.
+no locale dependence), called per page inside
+``pipeline.stage_extract``'s fused ``mapInPandas`` pass.
 
 The algorithm is a small, fully-specified subset of html2text:
   1. utf-8 decode (errors="replace" — deterministic replacement char);
@@ -26,11 +26,6 @@ from __future__ import annotations
 import html as _html
 import re
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
 _RE_COMMENT = re.compile(r"<!--.*?-->", re.DOTALL)
 _RE_DROP = re.compile(
     r"<(script|style|head)\b[^>]*>.*?</\1\s*>", re.DOTALL | re.IGNORECASE
@@ -45,7 +40,7 @@ _RE_SPACES = re.compile(r"[ \t\r\f\v]+")
 
 
 def extract_text_str(raw: bytes | str | None) -> str:
-    """Pure scalar form — used by the UDF body and by tests/datagen."""
+    """Pure scalar form — used by the extract stage and by tests/datagen."""
     if raw is None:
         return ""
     s = raw.decode("utf-8", errors="replace") if isinstance(raw, (bytes, bytearray)) else raw
@@ -60,13 +55,3 @@ def extract_text_str(raw: bytes | str | None) -> str:
         if line:
             lines.append(line)
     return "\n".join(lines)
-
-
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html_bytes: pd.Series) -> pd.Series:
-    return html_bytes.map(extract_text_str)
-
-
-def with_extracted_text(col: Column) -> Column:
-    """Column expression: extracted text from an html binary column."""
-    return extract_text_udf(col)

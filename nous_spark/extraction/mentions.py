@@ -25,10 +25,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
 from nous_spark.normalize import norm_identifier_value
 from nous_spark.schemas import IDENTIFIER_TYPES
 
@@ -55,37 +51,40 @@ _RE_SOCIAL = re.compile(
 )
 _SOCIAL_PLATFORM = {"li": "linkedin", "gh": "github", "tw": "twitter", "ig": "instagram"}
 
-MENTION_STRUCT = T.StructType(
-    [
-        T.StructField("id_type", T.StringType(), False),
-        T.StructField("id_value", T.StringType(), False),
-    ]
-)
-
 
 def extract_mentions_text(text: str | None) -> list[tuple[str, str]]:
     """Scalar form: ordered, deduped (id_type, id_value) mentions."""
     if not text:
         return []
     found: list[tuple[int, str, str]] = []
+    # mask explicit lines so their values are not re-detected as bare tokens
+    parts: list[str] = []
+    end = 0
     for m in _RE_EXPLICIT.finditer(text):
         found.append((m.start(), m.group(1).lower(), norm_identifier_value(m.group(2))))
-    # mask explicit lines so their values are not re-detected as bare tokens
-    masked = _RE_EXPLICIT.sub(lambda m: " " * (m.end() - m.start()), text)
-    for m in _RE_EMAIL.finditer(masked):
-        found.append((m.start(), "email", norm_identifier_value(m.group(0).lower())))
-    for m in _RE_HANDLE.finditer(masked):
-        found.append((m.start(), "username", norm_identifier_value(m.group(1))))
-    for m in _RE_PHONE.finditer(masked):
-        found.append((m.start(), "phone", norm_identifier_value(m.group(0))))
-    for m in _RE_UUID.finditer(masked):
-        found.append((m.start(), "uuid", norm_identifier_value(m.group(0).lower())))
-    for m in _RE_SOCIAL.finditer(masked):
-        platform = next(
-            _SOCIAL_PLATFORM[k] for k, v in m.groupdict().items() if v and k != "handle"
-        )
-        value = f"{platform}:{m.group('handle').lower()}"
-        found.append((m.start(), "social_id", norm_identifier_value(value)))
+        parts += (text[end : m.start()], " " * (m.end() - m.start()))
+        end = m.end()
+    masked = "".join(parts) + text[end:] if parts else text
+    # presence gates: a regex runs only if the literal every one of its
+    # matches contains is present (case-folded for IGNORECASE _RE_SOCIAL)
+    if "@" in masked:
+        for m in _RE_EMAIL.finditer(masked):
+            found.append((m.start(), "email", norm_identifier_value(m.group(0).lower())))
+        for m in _RE_HANDLE.finditer(masked):
+            found.append((m.start(), "username", norm_identifier_value(m.group(1))))
+    if "+" in masked:
+        for m in _RE_PHONE.finditer(masked):
+            found.append((m.start(), "phone", norm_identifier_value(m.group(0))))
+    if "-" in masked:
+        for m in _RE_UUID.finditer(masked):
+            found.append((m.start(), "uuid", norm_identifier_value(m.group(0).lower())))
+    if ".com/" in masked.lower():
+        for m in _RE_SOCIAL.finditer(masked):
+            platform = next(
+                _SOCIAL_PLATFORM[k] for k, v in m.groupdict().items() if v and k != "handle"
+            )
+            value = f"{platform}:{m.group('handle').lower()}"
+            found.append((m.start(), "social_id", norm_identifier_value(value)))
     found.sort(key=lambda x: x[0])
     out: list[tuple[str, str]] = []
     seen: set[tuple[str, str]] = set()
@@ -94,10 +93,3 @@ def extract_mentions_text(text: str | None) -> list[tuple[str, str]]:
             seen.add((t, v))
             out.append((t, v))
     return out
-
-
-@F.pandas_udf(T.ArrayType(MENTION_STRUCT))
-def extract_mentions_udf(text: pd.Series) -> pd.Series:
-    return text.map(
-        lambda t: [{"id_type": a, "id_value": b} for (a, b) in extract_mentions_text(t)]
-    )

@@ -14,22 +14,20 @@ prompt mandates and its integration tests pin down
   * generic/meta text yields ZERO facts (:78; test :102-113);
   * every fact carries a confidence in [0,1].
 
-Execution model: pure scalar function `extract_triples_text` wrapped in an
-Arrow-batched pandas UDF that returns `array<struct>` — one UDF call per
-~10k rows, zero per-row Python dispatch on the Spark side. Patterns are
-compiled once per executor at module import.
+Execution model: pure scalar function `extract_triples_text`, called per
+page inside `pipeline.stage_extract`'s fused `mapInPandas` pass (and by
+`streaming`, which reuses that stage). Patterns are compiled once per
+Python worker at module import. Each pattern row carries the literals
+its matches must contain, and one alternation of all of them gates each
+sentence, so a sentence with no trigger word (most boilerplate) costs one
+scan instead of one per pattern.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
 from nous_spark.normalize import clamp_confidence, norm_name, norm_type, norm_verb
-from nous_spark.schemas import EXTRACTED_TRIPLE
 
 # --------------------------------------------------------------------------
 # building blocks
@@ -73,7 +71,7 @@ def _split_list(phrase: str) -> list[str]:
 
 
 # --------------------------------------------------------------------------
-# pattern lexicon — each entry: (compiled_regex, handler(match) -> list)
+# pattern lexicon — each entry: (literals, compiled_regex, handler(match) -> list)
 # --------------------------------------------------------------------------
 def _h_enjoys(m):
     return [_mk("enjoys", "Hobby", _cap(x), 0.95) for x in _split_list(m.group(1))]
@@ -183,49 +181,84 @@ def _h_llamo_es(m):
     return [_mk("is_named", "Name", _proper(m.group(1)), 0.95)]
 
 
-_PATTERNS: list[tuple[re.Pattern, object]] = [
-    (re.compile(r"\benjoys?\s+((?:\w+)(?:(?:\s*,\s*|\s+and\s+)\w+)*)" + _OBJ_STOP), _h_enjoys),
+# Each row is (literals, regex, handler). ``literals`` gate the row: every
+# match of its regex contains at least one of them verbatim, so a sentence
+# holding none of them cannot match and the regex is never run. A literal
+# must be a case-exact run of the regex source that no match can avoid:
+# never across ``\s+``, a character class or an optional group ("llamo",
+# not "me llamo"; "ivo" for "[Vv]ivo"). tests/test_extraction_gate.py
+# checks every gated result against the ungated loop.
+_PATTERNS: list[tuple[tuple[str, ...], re.Pattern, object]] = [
+    (("enjoy",), re.compile(r"\benjoys?\s+((?:\w+)(?:(?:\s*,\s*|\s+and\s+)\w+)*)" + _OBJ_STOP), _h_enjoys),
     (
+        ("don't", "do not", "doesn't", "does not", "dislike"),
         re.compile(
             r"\b(?:don't|do not|doesn't|does not|dislikes?)\s+(?:like\s+)?"
             r"((?:[\w]+)(?:(?:\s*,\s*|\s+and\s+)[\w]+)*)" + _OBJ_STOP
         ),
         _h_dislikes,
     ),
-    (re.compile(r"(?<![Dd]is)(?<!not )(?<!n't )\blikes\s+((?:\w+)(?:(?:\s*,\s*|\s+and\s+)\w+)*)" + _OBJ_STOP), _h_likes),
-    (re.compile(r"\bloves?\s+((?:\w+)(?:(?:\s*,\s*|\s+and\s+)\w+)*)" + _OBJ_STOP), _h_loves),
-    (re.compile(r"\blives?\s+in\s+" + _PROPER), _h_lives_in),
-    (re.compile(r"\bworks?\s+as\s+an?\s+" + _PROPER), _h_works_as),
     (
+        ("likes",),
+        re.compile(r"(?<![Dd]is)(?<!not )(?<!n't )\blikes\s+((?:\w+)(?:(?:\s*,\s*|\s+and\s+)\w+)*)" + _OBJ_STOP),
+        _h_likes,
+    ),
+    (("love",), re.compile(r"\bloves?\s+((?:\w+)(?:(?:\s*,\s*|\s+and\s+)\w+)*)" + _OBJ_STOP), _h_loves),
+    (("live",), re.compile(r"\blives?\s+in\s+" + _PROPER), _h_lives_in),
+    (("work",), re.compile(r"\bworks?\s+as\s+an?\s+" + _PROPER), _h_works_as),
+    (
+        ("work",),
         re.compile(
             r"\bworks?\s+as\s+an?\s+([a-z][a-z]*(?:\s+[a-z][a-z]*)*?)"
             r"(?:\s+(?:now|today|currently)\b|[,.;!?]|$)"
         ),
         _h_works_as_lower,
     ),
-    (re.compile(r"\b[Vv]ivo\s+en\s+" + _PROPER), _h_vivo_es),
+    (("ivo",), re.compile(r"\b[Vv]ivo\s+en\s+" + _PROPER), _h_vivo_es),
     (
+        ("trabajo",),
         re.compile(r"\btrabajo\s+como\s+([a-zá-ú]+(?:\s+(?:de\s+)?[a-zá-ú]+)*)"),
         _h_trabajo_es,
     ),
-    (re.compile(r"\b[Mm]e\s+llamo\s+" + _PROPER), _h_llamo_es),
-    (re.compile(r"\bworks?\b[^.;!?]*?\bat\s+" + _PROPER), _h_works_at),
-    (re.compile(r"\bheadquartered\s+in\s+((?:[A-Z][\w&.'-]*)(?:(?:\s*,\s*|\s+)[A-Z][\w&.'-]*)*)"), _h_hq),
-    (re.compile(r"\bfounded\s+in\s+(\d{4})"), _h_founded),
-    (re.compile(r"\b(?:studied\s+at|graduated\s+from)\s+" + _PROPER), _h_studied),
-    (re.compile(r"\bspeaks?\s+((?:[A-Z]\w+)(?:(?:\s*,\s*|\s+and\s+)[A-Z]\w+)*)"), _h_speaks),
-    (re.compile(r"\b(?:was\s+)?born\s+in\s+" + _PROPER), _h_born_in),
-    (re.compile(r"\bmoved\s+to\s+" + _PROPER), _h_moved_to),
-    (re.compile(r"\bmarried\s+to\s+" + _PROPER), _h_married_to),
-    (re.compile(r"\bthink(?:s)?\s+(?:that\s+)?(.+?)\s+is\s+a\s+bad\s+idea"), _h_bad_idea),
-    (re.compile(r"\bthink(?:s)?\s+(?:that\s+)?(.+?)\s+is\s+a\s+(?:good|great)\s+idea"), _h_good_idea),
-    (re.compile(r"\ballergic\s+to\s+((?:\w+)(?:(?:\s*,\s*|\s+and\s+)\w+)*)" + _OBJ_STOP), _h_allergic),
-    (re.compile(r"\bplays?\s+((?:\w+)(?:(?:\s*,\s*|\s+and\s+)\w+)*)" + _OBJ_STOP), _h_plays),
-    (re.compile(r"\b(?:is\s+(?:the\s+)?)?CEO\s+of\s+" + _PROPER), _h_ceo_of),
-    (re.compile(r"\bowns?\s+an?\s+([\w\s]+?)" + _OBJ_STOP), _h_owns),
-    (re.compile(r"\b(?:vamos|vou)\s+abrir[^.;!?]*?\buma?\s+((?:empresa|neg[óo]cio|loja)(?:\s+\w+)?)"), _h_abrir_pt),
-    (re.compile(r"\buma?\s+((?:empresa|neg[óo]cio|loja)(?:\s+nov[ao])?)\s+que\b[^.;!?]*?\bvamos\s+abrir"), _h_abrir_pt),
+    (("llamo",), re.compile(r"\b[Mm]e\s+llamo\s+" + _PROPER), _h_llamo_es),
+    (("work",), re.compile(r"\bworks?\b[^.;!?]*?\bat\s+" + _PROPER), _h_works_at),
+    (
+        ("headquartered",),
+        re.compile(r"\bheadquartered\s+in\s+((?:[A-Z][\w&.'-]*)(?:(?:\s*,\s*|\s+)[A-Z][\w&.'-]*)*)"),
+        _h_hq,
+    ),
+    (("founded",), re.compile(r"\bfounded\s+in\s+(\d{4})"), _h_founded),
+    (("studied", "graduated"), re.compile(r"\b(?:studied\s+at|graduated\s+from)\s+" + _PROPER), _h_studied),
+    (("speak",), re.compile(r"\bspeaks?\s+((?:[A-Z]\w+)(?:(?:\s*,\s*|\s+and\s+)[A-Z]\w+)*)"), _h_speaks),
+    (("born",), re.compile(r"\b(?:was\s+)?born\s+in\s+" + _PROPER), _h_born_in),
+    (("moved",), re.compile(r"\bmoved\s+to\s+" + _PROPER), _h_moved_to),
+    (("married",), re.compile(r"\bmarried\s+to\s+" + _PROPER), _h_married_to),
+    (("idea",), re.compile(r"\bthink(?:s)?\s+(?:that\s+)?(.+?)\s+is\s+a\s+bad\s+idea"), _h_bad_idea),
+    (("idea",), re.compile(r"\bthink(?:s)?\s+(?:that\s+)?(.+?)\s+is\s+a\s+(?:good|great)\s+idea"), _h_good_idea),
+    (
+        ("allergic",),
+        re.compile(r"\ballergic\s+to\s+((?:\w+)(?:(?:\s*,\s*|\s+and\s+)\w+)*)" + _OBJ_STOP),
+        _h_allergic,
+    ),
+    (("play",), re.compile(r"\bplays?\s+((?:\w+)(?:(?:\s*,\s*|\s+and\s+)\w+)*)" + _OBJ_STOP), _h_plays),
+    (("CEO",), re.compile(r"\b(?:is\s+(?:the\s+)?)?CEO\s+of\s+" + _PROPER), _h_ceo_of),
+    (("own",), re.compile(r"\bowns?\s+an?\s+([\w\s]+?)" + _OBJ_STOP), _h_owns),
+    (
+        ("abrir",),
+        re.compile(r"\b(?:vamos|vou)\s+abrir[^.;!?]*?\buma?\s+((?:empresa|neg[óo]cio|loja)(?:\s+\w+)?)"),
+        _h_abrir_pt,
+    ),
+    (
+        ("abrir",),
+        re.compile(r"\buma?\s+((?:empresa|neg[óo]cio|loja)(?:\s+nov[ao])?)\s+que\b[^.;!?]*?\bvamos\s+abrir"),
+        _h_abrir_pt,
+    ),
 ]
+
+# any literal of any row; a sentence without a hit cannot match any row
+_GATE = re.compile(
+    "|".join(re.escape(lit) for lit in dict.fromkeys(lit for lits, _, _ in _PATTERNS for lit in lits))
+)
 
 
 def with_history(history: str | None, text: str | None) -> str:
@@ -253,9 +286,11 @@ def extract_triples_text(text: str | None) -> list[tuple[str, str, str, float]]:
     seen: set[tuple[str, str, str]] = set()
     for sentence in _SENT_SPLIT.split(text):
         sentence = sentence.strip()
-        if not sentence or _META.search(sentence):
+        if not sentence or not _GATE.search(sentence) or _META.search(sentence):
             continue
-        for rx, handler in _PATTERNS:
+        for lits, rx, handler in _PATTERNS:
+            if not any(lit in sentence for lit in lits):
+                continue
             for m in rx.finditer(sentence):
                 for trip in handler(m):
                     if trip is None:
@@ -265,13 +300,3 @@ def extract_triples_text(text: str | None) -> list[tuple[str, str, str, float]]:
                         seen.add(key)
                         out.append(trip)
     return out
-
-
-@F.pandas_udf(T.ArrayType(EXTRACTED_TRIPLE))
-def extract_triples_udf(text: pd.Series) -> pd.Series:
-    return text.map(
-        lambda t: [
-            {"pred": p, "fact_type": ft, "fact_name": fn, "confidence": c}
-            for (p, ft, fn, c) in extract_triples_text(t)
-        ]
-    )

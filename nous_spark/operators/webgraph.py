@@ -474,12 +474,17 @@ def link_quality_signals_oracle_sql(
 
 # ------------------------------------------------ robots meta gate
 # Lexical rule (Java-regex ∩ RE2 ∩ Python-re ∩ DuckDB-RE2, same stance
-# as _HTML_LINK_RE): a <meta ...> tag carrying a double-quoted
-# name="robots" attribute, case-insensitive; directive tokens
-# (noindex/nofollow/none, word-bounded) are searched in the raw tag
-# text, so attribute order (content before name) doesn't matter and
-# 'none' implies both per the robots spec.
-_ROBOTS_META_RE = r'(?is)<meta\s[^>]*name\s*=\s*"robots"[^>]*>'
+# as _HTML_LINK_RE): a <meta ...> tag carrying a name=robots attribute,
+# double-quoted, single-quoted or unquoted, case-insensitive. ``name``
+# must start an attribute (after whitespace or a closing quote), so
+# data-name="robots" is not read, and the value must be exactly robots.
+# Directive tokens (noindex/nofollow/none, word-bounded) are searched in
+# the raw tag text, so attribute order (content before name) doesn't
+# matter and 'none' implies both per the robots spec.
+_ROBOTS_META_RE = (
+    r"""(?is)<meta\s(?:[^>]*[\s"'])?name\s*=\s*(?:"robots"|'robots'|robots)"""
+    r"""(?:[\s"'/][^>]*)?>"""
+)
 _NOINDEX_RE = r"(?i)\b(noindex|none)\b"
 _NOFOLLOW_RE = r"(?i)\b(nofollow|none)\b"
 
@@ -660,17 +665,21 @@ def url_revisit_diff(
     page) are coalesced to '' BEFORE the min/compare — otherwise
     min() skips them (both engines) and a URL whose only hash is NULL
     silently reads as absent from its snapshot ('new'/'gone' instead
-    of 'unchanged'/'changed').
+    of 'unchanged'/'changed'). NULL urls are coalesced to '' the same
+    way: the outer join is NULL-unsafe, so a NULL-url capture present
+    in both snapshots would otherwise read as one 'gone' plus one 'new'
+    row instead of one compared row.
 
     Scale: two map-side-combinable hash aggs (URL-keyed) feeding ONE
     full-outer shuffle join co-partitioned on the same url key — at
     10^10 URLs both sides hash-partition identically, no broadcast,
     no skew (URLs are unique keys by construction after the agg).
     """
-    p = prev.groupBy(F.col(url_col).alias("url")).agg(
+    url = F.coalesce(F.col(url_col), F.lit("")).alias("url")
+    p = prev.groupBy(url).agg(
         F.min(F.coalesce(F.col(hash_col), F.lit(""))).alias("prev_md5")
     )
-    c = curr.groupBy(F.col(url_col).alias("url")).agg(
+    c = curr.groupBy(url).agg(
         F.min(F.coalesce(F.col(hash_col), F.lit(""))).alias("curr_md5")
     )
     status = (
@@ -690,11 +699,13 @@ def url_revisit_diff_oracle_sql(prev_sql: str, curr_sql: str) -> str:
     are (url, content_md5) relations."""
     return f"""
         WITH p AS (
-          SELECT url, min(coalesce(content_md5, '')) AS prev_md5
-          FROM ({prev_sql}) GROUP BY url
+          SELECT coalesce(url, '') AS url,
+                 min(coalesce(content_md5, '')) AS prev_md5
+          FROM ({prev_sql}) GROUP BY 1
         ), c AS (
-          SELECT url, min(coalesce(content_md5, '')) AS curr_md5
-          FROM ({curr_sql}) GROUP BY url
+          SELECT coalesce(url, '') AS url,
+                 min(coalesce(content_md5, '')) AS curr_md5
+          FROM ({curr_sql}) GROUP BY 1
         )
         SELECT coalesce(p.url, c.url) AS url, p.prev_md5, c.curr_md5,
                CASE WHEN p.prev_md5 IS NULL THEN 'new'

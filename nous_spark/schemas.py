@@ -45,15 +45,6 @@ MENTIONS = T.StructType(
     ]
 )
 
-EXTRACTED_TRIPLE = T.StructType(
-    [
-        T.StructField("pred", T.StringType(), False),       # verb, trimmed+lowered
-        T.StructField("fact_type", T.StringType(), False),  # English, trimmed
-        T.StructField("fact_name", T.StringType(), False),  # source language, trimmed
-        T.StructField("confidence", T.DoubleType(), False),
-    ]
-)
-
 # exploded, linked triples prior to graph materialization
 TRIPLES = T.StructType(
     [

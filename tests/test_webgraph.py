@@ -239,6 +239,14 @@ ROBOTS_CASES = [
     (6, '<meta name="robots" content="noindexing">'),
     (7, None),
     (8, ""),
+    # single-quoted and unquoted name=robots are read too
+    (9, "<head><meta name='robots' content='noindex'></head>"),
+    (10, "<head><meta name=robots content=nofollow></head>"),
+    (11, "<meta content=none name=robots>"),
+    # decoys: an attribute merely ending in 'name', and a value that
+    # only starts with 'robots'
+    (12, '<head><meta data-name="robots" content="noindex"></head>'),
+    (13, "<meta name=robotsx content=noindex><meta name='robots-x' content=none>"),
 ]
 
 
@@ -259,6 +267,11 @@ def test_robots_meta_matches_python_reference(spark):
     assert got[5] == (True, True)      # union over multiple tags
     assert got[6] == (False, False)    # word boundary
     assert got[7] == (False, False) and got[8] == (False, False)
+    assert got[9] == (True, False)     # single-quoted
+    assert got[10] == (False, True)    # unquoted
+    assert got[11] == (True, True)     # unquoted, content first
+    assert got[12] == (False, False)   # data-name decoy
+    assert got[13] == (False, False)   # robots-prefixed values
 
 
 def test_robots_meta_duckdb_oracle_on_adversarial_corpus(spark):
@@ -437,6 +450,34 @@ def test_url_revisit_diff_semantics(spark):
         "u5": (None, "h5", "new"),
         "u6": ("", "", "unchanged"),  # NULL -> '' sentinel, not 'new'
     }
+
+
+def test_url_revisit_diff_null_url_is_one_row(spark):
+    """A NULL-url capture present in both snapshots is one compared row
+    keyed '', not a 'gone' row plus a 'new' row; the oracle agrees."""
+    from nous_spark.operators.webgraph import (
+        url_revisit_diff,
+        url_revisit_diff_oracle_sql,
+    )
+
+    prev_rows = [(None, "h0"), ("u1", "h1")]
+    curr_rows = [(None, "h0"), ("u1", "h2")]
+    prev = spark.createDataFrame(prev_rows, "url string, content_md5 string")
+    curr = spark.createDataFrame(curr_rows, "url string, content_md5 string")
+    got = sorted(tuple(r) for r in url_revisit_diff(prev, curr).collect())
+    assert got == [("", "h0", "h0", "unchanged"), ("u1", "h1", "h2", "changed")]
+    con = duckdb.connect()
+    con.register("prev_snap", pd.DataFrame(prev_rows, columns=["url", "content_md5"]))
+    con.register("curr_snap", pd.DataFrame(curr_rows, columns=["url", "content_md5"]))
+    duck = sorted(
+        tuple(r)
+        for r in con.execute(
+            url_revisit_diff_oracle_sql(
+                "SELECT * FROM prev_snap", "SELECT * FROM curr_snap"
+            )
+        ).fetchall()
+    )
+    assert duck == got
 
 
 def test_url_revisit_diff_duckdb_oracle(spark):
