@@ -1948,7 +1948,7 @@ def _q_kg_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapping = mentions.select(
         "anchor_id", "entity_key", F.col("anchor_id").alias("entity_id")
     ).dropDuplicates(["anchor_id"])
-    linked = stage_link(docs, mentions, mapping)
+    linked = stage_link(docs, mapping)
     return linked.select("entity_id", "pred", "fact_id", "confidence", "source_url")
 
 

@@ -3,7 +3,8 @@
 Reproduces the reference's 4-node / 3-edge property graph
 (docs/graph_db_schema.md:7) and its query semantics as DataFrame ops:
 
-  * materialize_graph — pages-derived triples/mentions -> the five tables;
+  * build_entity_tables / build_fact_tables — linked mentions/triples ->
+    the five tables;
   * idempotent_append — dedup + anti-join before every write (the batch
     analog of MERGE find-or-create, age_repository.py:101-123,689-701);
   * find_entity_by_identifier — the lookup Cypher (age_repository.py:206-221)
@@ -16,16 +17,16 @@ Reproduces the reference's 4-node / 3-edge property graph
 
 Scale notes: joins to ``facts``/``identifiers`` dimension tables are
 broadcast; edge aggregations pre-aggregate map-side (partial agg is free
-via Catalyst); the hot-entity skew path is handled by the pipeline's
-salted repartition before the final edge dedup (pipeline.py).
+via Catalyst). That map-side partial aggregate is also the hot-entity
+skew handling for the min/max edge merges: a hot key reaches its reducer
+as one row per map task. Only aggregates Spark cannot pre-aggregate
+(collect_set / top-k) are salted (skew.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from nous_spark.normalize import fact_id_col
 
 HAS_IDENTIFIER = "HAS_IDENTIFIER"
 HAS_FACT = "HAS_FACT"
@@ -35,32 +36,6 @@ DERIVED_FROM = "DERIVED_FROM"
 # --------------------------------------------------------------------------
 # materialization
 # --------------------------------------------------------------------------
-def build_graph_tables(
-    linked_triples: DataFrame, linked_mentions: DataFrame, n_salts: int = 0
-) -> dict[str, DataFrame]:
-    """From linked triples/mentions, derive the five graph tables.
-
-    linked_triples: (entity_id, pred, fact_type, fact_name, fact_id,
-                     confidence, source_url, warc_ts, text?)
-    linked_mentions: (url, mention_rank, id_type, id_value, entity_id, warc_ts)
-
-    ``n_salts > 1`` turns the HAS_FACT merge into an explicit two-phase
-    salted aggregation on the head-entity key (north_rule): partial
-    min/max per (edge key, salt) spread hot entities ("Location:Paris"
-    fan-in) over n_salts reducers before the final per-key merge.
-    Results are identical either way — the salt affects placement only.
-
-    Split into ``build_entity_tables`` (mentions-only inputs) and
-    ``build_fact_tables`` (needs the linked triples too) so the pipeline
-    can start writing nodes/identifiers while the triples stage is still
-    materializing — this wrapper composes both for single-call users.
-    """
-    return {
-        **build_entity_tables(linked_mentions),
-        **build_fact_tables(linked_triples, linked_mentions, n_salts=n_salts),
-    }
-
-
 def build_entity_tables(linked_mentions: DataFrame) -> dict[str, DataFrame]:
     """nodes + identifiers — derived from the mapped mentions alone
     (no dependency on the linked triples stage)."""
@@ -99,9 +74,14 @@ def build_entity_tables(linked_mentions: DataFrame) -> dict[str, DataFrame]:
 
 
 def build_fact_tables(
-    linked_triples: DataFrame, linked_mentions: DataFrame, n_salts: int = 0
+    linked_triples: DataFrame, linked_mentions: DataFrame
 ) -> dict[str, DataFrame]:
-    """facts + sources + edges (see build_graph_tables for contracts)."""
+    """facts + sources + edges.
+
+    linked_triples: (entity_id, pred, fact_type, fact_name, fact_id,
+                     confidence, source_url, warc_ts)
+    linked_mentions: (url, mention_rank, id_type, id_value, entity_id, warc_ts)
+    """
     # Deterministic merges for facts/sources too: non-key columns CAN
     # vary per key (fact_id is 'type:name' — a ':' inside type makes two
     # (type, name) pairs collide on one fact_id; one url recrawled at two
@@ -146,32 +126,16 @@ def build_fact_tables(
         )
     )
 
-    if n_salts > 1:
-        from nous_spark.skew import with_salt
-
-        partial = (
-            with_salt(linked_triples, n_salts)
-            .groupBy(
-                F.col("entity_id").alias("src"),
-                F.col("fact_id").alias("dst"),
-                "pred",
-                "_salt",
-            )
-            .agg(
-                F.max("confidence").alias("_conf"),
-                F.min("warc_ts").alias("_ts"),
-            )
-        )
-        hf_merged = partial.groupBy("src", "dst", "pred").agg(
-            F.max("_conf").alias("confidence"), F.min("_ts").alias("created_at")
-        )
-    else:
-        hf_merged = linked_triples.groupBy(
-            F.col("entity_id").alias("src"), F.col("fact_id").alias("dst"), "pred"
-        ).agg(
-            F.max("confidence").alias("confidence"),
-            F.min("warc_ts").alias("created_at"),
-        )
+    # max/min only, so Spark pre-aggregates per map task before the one
+    # exchange: a hot entity reaches its reducer as one row per map task.
+    # That partial aggregate is the skew handling; a salt would only add
+    # an exchange (plan pinned in tests/test_graph_semantics.py).
+    hf_merged = linked_triples.groupBy(
+        F.col("entity_id").alias("src"), F.col("fact_id").alias("dst"), "pred"
+    ).agg(
+        F.max("confidence").alias("confidence"),
+        F.min("warc_ts").alias("created_at"),
+    )
     has_fact = (
         hf_merged
         .select(

@@ -322,12 +322,3 @@ def canonical_mapping(
             F.coalesce(comp.component, anchors.anchor_id).alias("entity_id"),
         )
     )
-
-
-def rank_mentions(mentions_exploded: DataFrame) -> DataFrame:
-    """Assign document-order rank; rank 0 is the page's subject identifier.
-
-    Expects (url, pos, id_type, id_value) where pos is the index within
-    the page's mention array (posexplode output).
-    """
-    return mentions_exploded.withColumnRenamed("pos", "mention_rank")

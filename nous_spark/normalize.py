@@ -24,8 +24,6 @@ import uuid
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from nous_spark.schemas import IDENTIFIER_TYPES
-
 # Namespace for deterministic entity ids: uuid5 over "idtype:idvalue".
 # The reference mints uuid4 per new entity (entity_model.py:21) and makes
 # creation idempotent by find-or-create on the identifier
@@ -88,10 +86,6 @@ def synthetic_sentence(verb: str, fact_type: str, name: str) -> str:
     return f"The entity {verb} {fact_type}: {name}"
 
 
-def is_valid_identifier_type(t: str) -> bool:
-    return t in IDENTIFIER_TYPES
-
-
 def clamp_confidence(c: float | None) -> float:
     """confidence in [0,1], default 1.0 (fact_model.py:71-76)."""
     if c is None:
@@ -131,10 +125,6 @@ def norm_verb_col(c: Column) -> Column:
 
 def fact_id_col(fact_type: Column, name: Column) -> Column:
     return F.concat(fact_type, F.lit(":"), name)
-
-
-def entity_key_col(id_type: Column, id_value: Column) -> Column:
-    return F.concat(id_type, F.lit(":"), id_value)
 
 
 def synthetic_sentence_col(verb: Column, fact_type: Column, name: Column) -> Column:

@@ -420,9 +420,9 @@ def simhash_fingerprints(
 
     DEFAULT: vectorized numpy per Arrow batch (bit matrix of word hashes,
     one (n_words x 64) op per doc). Honest A/B at sf0.1: 1.3-2.4s vs
-    3.0-4.9s for the JVM higher-order-function variant
-    (simhash_fingerprints_jvm) — same conclusion as minhash: numpy SIMD
-    beats interpreted HOF lambdas.
+    3.0-4.9s for a JVM higher-order-function form (xxhash64 per word into
+    64 counters) — same conclusion as minhash: numpy SIMD beats
+    interpreted HOF lambdas.
     """
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -496,26 +496,6 @@ def _simhash_fp_col(words, hashes, n_bits: int):
     return F.when(F.size(words) == 0, F.lit(0).cast("long")).otherwise(fp)
 
 
-def simhash_fingerprints_jvm(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    seed: int = 42,
-) -> DataFrame:
-    """JVM-only SimHash variant (no Python workers): per word,
-    xxhash64(word, seed) contributes +-1 to each of 64 bit counters; the
-    fingerprint sets bit j where counter j > 0. Different hash family
-    than the default — not bit-identical, same blocking semantics.
-    This is the SCALE path (xxhash64 is the cheap JVM hash); the md5
-    variant below trades hash cost for cross-engine checkability.
-    """
-    words = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
-    hashes = F.transform(words, lambda w: F.xxhash64(w, F.lit(seed)))
-    return docs.select(
-        F.col(id_col), _simhash_fp_col(words, hashes, 64).alias("simhash")
-    )
-
-
 def simhash_fingerprints_md5(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -575,7 +555,7 @@ def simhash_near_dups(
     hamming-4..8 pairs that differ in all four chunks). max_hamming=3
     reproduces the classic 4 x 16-bit split. The verification
     (bit_count of xor) runs JVM-side. ``max_hamming`` must be < n_bits
-    (``n_bits``: fingerprint width — 64 for the xxhash64 default, 32
+    (``n_bits``: fingerprint width — 64 for the default, 32
     for the cross-engine md5 variant).
 
     ``max_bucket``: expected (chunk_idx, chunk_val) population is

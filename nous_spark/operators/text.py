@@ -12,8 +12,6 @@ from __future__ import annotations
 
 import math
 import re
-import zlib
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -25,12 +23,6 @@ def token_count_col(text: Column) -> Column:
     """Whitespace token count — identical formula to the DuckDB oracle:
     length(regexp_split_to_array(trim(text), '\\s+'))."""
     return F.size(F.split(F.trim(text), r"\s+"))
-
-
-# ASCII classes: keeps the Python form byte-compatible with the JVM
-# (Java regex \w is ASCII by default) and DuckDB (RE2 \w is ASCII) —
-# accented letters tokenize as single non-word marks in all three.
-_BPEISH = re.compile(r"\w+|[^\w\s]", re.ASCII)
 
 
 def bpe_ish_token_count_col(text: Column) -> Column:
@@ -45,27 +37,6 @@ def bpe_ish_token_count_col(text: Column) -> Column:
         F.lit(0).cast("long"),
         lambda acc, t: acc + F.ceil(F.length(t) / 6),
     )
-
-
-def bpe_ish_token_count(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """A BPE-ish token estimate: word pieces + punctuation marks, with
-    long words counted as ceil(len/6) subword units (the standard
-    ~4-6 chars/token heuristic). Arrow-batched; same token rule as
-    ``bpe_ish_token_count_col`` (ASCII classes)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            counts = []
-            for text in pdf[text_col]:
-                n = 0
-                for tok in _BPEISH.findall(text or ""):
-                    n += max(1, -(-len(tok) // 6))
-                counts.append(n)
-            out = pdf[["doc_id"]].copy()
-            out["n_tokens"] = counts
-            yield out
-
-    return docs.select("doc_id", text_col).mapInPandas(gen, "doc_id long, n_tokens long")
 
 
 # ---------------------------------------------------------------- quality
@@ -302,11 +273,6 @@ def lang_id_text(text: str | None) -> str:
     return best_lang if best_score > 0.02 else "und"
 
 
-@F.pandas_udf(T.StringType())
-def lang_id_udf(text: pd.Series) -> pd.Series:
-    return text.map(lang_id_text)
-
-
 def word_tokens_col(text: Column) -> Column:
     """THE word tokenizer of this module ([a-z+accents]+ runs of the
     lowered text): lang_id_col, tfidf_topk_terms and
@@ -353,9 +319,8 @@ def fingerprint_col(
     (oracle-checkable): md5 each word-k-gram, take the rolling
     ``window``-min (lexicographic on the hex strings — a valid total
     order for winnowing), md5 the first ``keep`` distinct minima in
-    sorted order. Robust to local edits like the crc32 Python variant
-    (``fingerprint_text``), but shared verbatim with DuckDB (md5 + list
-    ops on both sides)."""
+    sorted order. Robust to local edits, and shared verbatim with DuckDB
+    (md5 + list ops on both sides)."""
     words = F.split(F.trim(text), r"\s+")
     n = F.greatest(F.size(words) - (k - 1), F.lit(1))
     grams = F.transform(
@@ -368,25 +333,6 @@ def fingerprint_col(
     )
     sel = F.slice(F.array_sort(F.array_distinct(mins)), 1, keep)
     return F.md5(F.concat_ws("", sel).cast("binary"))
-
-
-def fingerprint_text(text: str | None, window: int = 8) -> int:
-    """Winnowing-style document fingerprint: min rolling-window hash over
-    word 4-gram crc32s — robust to local edits, deterministic."""
-    if not text:
-        return 0
-    words = text.split()
-    grams = [" ".join(words[i : i + 4]) for i in range(max(1, len(words) - 3))]
-    hs = [zlib.crc32(g.encode()) for g in grams]
-    if len(hs) <= window:
-        return min(hs) if hs else 0
-    mins = [min(hs[i : i + window]) for i in range(len(hs) - window + 1)]
-    return zlib.crc32(bytes(str(sorted(set(mins))[:16]), "utf-8"))
-
-
-@F.pandas_udf(T.LongType())
-def fingerprint_udf(text: pd.Series) -> pd.Series:
-    return text.map(fingerprint_text)
 
 
 # ------------------------------------------------------- repetition signals

@@ -13,9 +13,9 @@ Resumability (north_rule): a ``_manifest.json`` in the run directory
 records completed stages; re-running skips them and re-reads their
 parquet output — combined with idempotent (dedup-keyed) writes, a
 killed-and-restarted run produces byte-identical tables with zero
-duplicate rows. Per-stage metrics rows (rows_in/rows_out/wall) and
-per-partition lineage rows land in ``metrics/`` — the analog of the
-reference's token_usage_events ledger (usage/models.py:16-63).
+duplicate rows. Per-stage metrics rows (rows_out/tokens/wall) land in
+``metrics/`` and per-partition lineage rows in ``lineage/`` — the analog
+of the reference's token_usage_events ledger (usage/models.py:16-63).
 """
 
 from __future__ import annotations
@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 from nous_spark.extraction.html import extract_text_str
 from nous_spark.extraction.mentions import extract_mentions_text
 from nous_spark.extraction.triples import extract_triples_text
-from nous_spark.graph import build_graph_tables
 from nous_spark.linking import canonical_mapping, with_anchor_id
 from nous_spark.normalize import fact_id_col
 
@@ -144,7 +143,7 @@ def stage_canonical(
     )
 
 
-def stage_link(docs: DataFrame, mentions: DataFrame, mapping: DataFrame) -> DataFrame:
+def stage_link(docs: DataFrame, mapping: DataFrame) -> DataFrame:
     """Attach each page's triples to its subject's canonical entity id.
 
     The subject is the page's FIRST mention — already the first element
@@ -157,9 +156,7 @@ def stage_link(docs: DataFrame, mentions: DataFrame, mapping: DataFrame) -> Data
     distinct identity (<< one per page), so AQE broadcasts it at bench
     scale, and at web scale this is the unavoidable identity-resolution
     shuffle — strictly cheaper than the url self-join it replaces, which
-    shuffled the full per-page corpus a second time. ``mentions`` stays
-    in the signature for API stability (the exploded table still feeds
-    canonical/materialize).
+    shuffled the full per-page corpus a second time.
     """
     first = F.element_at("mentions", 1)
     first_key = F.concat_ws(":", first["id_type"], first["id_value"])
@@ -195,12 +192,6 @@ def stage_link(docs: DataFrame, mentions: DataFrame, mapping: DataFrame) -> Data
             "warc_ts",
         )
     )
-
-
-def stage_materialize(linked_triples: DataFrame, mentions_mapped: DataFrame, n_salts: int = 16) -> dict[str, DataFrame]:
-    """Materialize the five graph tables; HAS_FACT merging runs as the
-    explicit two-phase salted aggregation (hot-entity skew, north_rule)."""
-    return build_graph_tables(linked_triples, mentions_mapped, n_salts=n_salts)
 
 
 # --------------------------------------------------------------------------
@@ -299,8 +290,6 @@ class Run:
                 {
                     "run_id": self.run_id,
                     "stage": stage,
-                    "partition_id": None,
-                    "rows_in": None,
                     "rows_out": rows_out,
                     "tokens": tokens,
                     "cost_usd": cost,
@@ -343,7 +332,7 @@ class Run:
         a Spark job added two serial driver round trips (createDataFrame
         + collect + write) to every run — pure non-scaling wall-clock at
         bench corpus sizes. Parquet-on-disk layout is unchanged (Spark
-        reads it back with the METRICS schema)."""
+        reads it back with the schema below)."""
         if not self.metrics:
             return
         import pyarrow as pa
@@ -360,8 +349,6 @@ class Run:
             [
                 pa.field("run_id", pa.string(), nullable=False),
                 pa.field("stage", pa.string(), nullable=False),
-                pa.field("partition_id", pa.int32()),
-                pa.field("rows_in", pa.int64()),
                 pa.field("rows_out", pa.int64()),
                 pa.field("tokens", pa.int64()),
                 pa.field("cost_usd", pa.decimal128(18, 8)),
@@ -394,7 +381,6 @@ def run_pipeline(
     out_dir: str,
     run_id: str = "run",
     alias_dict: DataFrame | None = None,
-    n_salts: int = 16,
     tenant_id: str | None = None,
     use_lsh: bool = False,
 ) -> dict[str, DataFrame]:
@@ -460,9 +446,9 @@ def run_pipeline(
                 return run.checkpoint(f"graph_{name}", stamp(ent_tables[name]), part)
 
             futs = {name: pool.submit(write_after_fill, name) for name in ("nodes", "identifiers")}
-            linked = run.checkpoint("triples", stage_link(docs, mentions, mapping))
+            linked = run.checkpoint("triples", stage_link(docs, mapping))
 
-            fact_tables = build_fact_tables(linked, mentions_mapped, n_salts=n_salts)
+            fact_tables = build_fact_tables(linked, mentions_mapped)
             # cluster edge files by head entity: parquet row-group min/max
             # stats on `src` then prune most files for point recall lookups
             # (the batch analog of the reference's unique B-tree on

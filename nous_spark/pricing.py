@@ -20,8 +20,7 @@ from __future__ import annotations
 
 from decimal import Decimal
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 # per-1M-token USD rates by operation (the reference reads these from
 # model settings; fixed table here — rates chosen to be exact at 8 dp
@@ -58,17 +57,6 @@ def cost_usd(
     if completion_tokens is not None:
         cost += Decimal(completion_tokens) * cr
     return cost.quantize(Decimal("0.00000001"))
-
-
-def cost_usd_col(
-    operation: str, prompt_tokens: Column, completion_tokens: Column | None = None
-) -> Column:
-    """Column form: DECIMAL(18,8) cost from token-count columns."""
-    pr, cr = per_token_rates(operation)
-    cost = prompt_tokens.cast("decimal(18,0)") * F.lit(pr)
-    if completion_tokens is not None:
-        cost = cost + completion_tokens.cast("decimal(18,0)") * F.lit(cr)
-    return cost.cast("decimal(18,8)")
 
 
 def pricing_dim(spark: SparkSession) -> DataFrame:

@@ -33,8 +33,6 @@ aggregate per entity with map-side partial aggregation.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window

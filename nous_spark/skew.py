@@ -1,26 +1,26 @@
-"""Skew-handling primitives: salted repartition + two-phase aggregation.
+"""Salted two-phase aggregation for aggregates Spark cannot pre-aggregate.
 
 Web-scale KG construction has pathologically hot keys: entities like
 "Location:Paris" fan in from millions of pages (our synthetic corpus
-reproduces this with a Zipf-skewed city/company pool — datagen.py). A
-single-shuffle groupBy on the raw key puts the whole hot key in one
-reducer; the north_rule mandates explicit salted repartitioning on the
-head-entity hash instead.
+reproduces this with a Zipf-skewed city/company pool — datagen.py).
 
-Pattern: add salt = pmod(xxhash64(key, monotonic row disambiguator), S),
-aggregate by (key, salt) — the *partial* phase, spread over S reducers —
-then aggregate the S partials by key — the *final* phase, S rows per key.
+For algebraic merges (min/max/count/sum) Spark's HashAggregate already
+runs a partial aggregate per map task before the shuffle, so a hot key
+reaches its reducer as one row per map task — that IS the two-phase
+merge, and the HAS_FACT edge merge (graph.build_fact_tables) relies on
+it. Salting only matters for collect-style aggregates (collect_set /
+collect_list, top-k), whose partial state grows with the key's fan-in:
 
-Note Spark's own HashAggregate already does map-side partials for
-algebraic aggs; salting matters for (a) non-algebraic aggs
-(collect_set/list), (b) bounding reducer memory on dedup of very hot
-keys, and (c) stabilizing AQE plans. ``salted_distinct`` is the one the
-pipeline uses before edge materialization.
+add salt = pmod(xxhash64(...), S), aggregate by (key, salt) — the
+*partial* phase, spread over S reducers — then merge the S partials by
+key — the *final* phase, S rows per key. ``salted_collect_set`` backs
+the kg_salted_collect query; ``with_salt`` also feeds
+semantic.summarize_entities.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -40,20 +40,6 @@ def with_salt(df: DataFrame, n_salts: int, *cols: str) -> DataFrame:
     return df.withColumn("_salt", F.pmod(src, F.lit(n_salts)))
 
 
-def salted_repartition(df: DataFrame, key_cols: list[str], n_parts: int, n_salts: int) -> DataFrame:
-    """Repartition on (key, salt) so one hot key spreads over n_salts
-    partitions — repartition(N, pmod(xxhash64(key, salt), N))."""
-    salted = with_salt(df, n_salts)
-    return salted.repartition(n_parts, *[F.col(c) for c in key_cols], F.col("_salt"))
-
-
-def salted_count(df: DataFrame, key_cols: list[str], n_salts: int, out_col: str = "n") -> DataFrame:
-    """Two-phase count by key: (key, salt) partial counts -> final sum."""
-    salted = with_salt(df, n_salts)
-    partial = salted.groupBy(*key_cols, "_salt").agg(F.count("*").alias("_pc"))
-    return partial.groupBy(*key_cols).agg(F.sum("_pc").cast("long").alias(out_col))
-
-
 def salted_collect_set(
     df: DataFrame, key_cols: list[str], value_col: str, n_salts: int, out_col: str = "vals"
 ) -> DataFrame:
@@ -66,21 +52,3 @@ def salted_collect_set(
     return partial.groupBy(*key_cols).agg(
         F.array_distinct(F.flatten(F.collect_list("_ps"))).alias(out_col)
     )
-
-
-def salted_distinct(df: DataFrame, key_cols: list[str], n_salts: int) -> DataFrame:
-    """dropDuplicates(keys) with an explicit pre-spread of hot keys.
-
-    Phase 1 dedups within (key, salt) buckets; phase 2 dedups the ≤n_salts
-    survivors per key. Output: one arbitrary-but-deterministic row per key
-    (ties broken by the salt bucket order via min on remaining cols is NOT
-    applied — rows identical on key_cols are interchangeable here because
-    callers dedup full duplicate rows).
-    """
-    salted = with_salt(df, n_salts)
-    phase1 = salted.dropDuplicates([*key_cols, "_salt"])
-    return phase1.dropDuplicates(key_cols).drop("_salt")
-
-
-def pmod_bucket(col: Column, n: int) -> Column:
-    return F.pmod(F.xxhash64(col), F.lit(n))

@@ -32,7 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nous_spark.graph import build_graph_tables
+from nous_spark.graph import build_entity_tables, build_fact_tables
 from nous_spark.io import idempotent_write
 from nous_spark.pipeline import GRAPH_TABLES, stage_extract, stage_link, stage_mentions
 from nous_spark.linking import canonical_mapping
@@ -76,14 +76,17 @@ def assimilate_batch(
         mapping = canonical_mapping(
             mentions, cooccur_edges=cooccurrence_alias_edges_from_arrays(docs)
         )
-        linked = stage_link(docs, mentions, mapping).persist()
+        linked = stage_link(docs, mapping).persist()
         mentions_mapped = (
             mentions.join(mapping, "anchor_id")
             .select("url", "mention_rank", "id_type", "id_value", "entity_id", "warc_ts")
             .persist()
         )
         try:
-            tables = build_graph_tables(linked, mentions_mapped)
+            tables = {
+                **build_entity_tables(mentions_mapped),
+                **build_fact_tables(linked, mentions_mapped),
+            }
 
             appended: dict[str, int] = {}
             for name in GRAPH_TABLES:

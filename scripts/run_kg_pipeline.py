@@ -13,7 +13,7 @@ multi-executor clusters"):
         scripts/run_kg_pipeline.py \
         --pages <pages-table-path-or-iceberg-ident> \
         --out   <run-dir> \
-        [--table-format iceberg] [--run-id prod1] [--n-salts 64] [--lsh]
+        [--table-format iceberg] [--run-id prod1] [--lsh]
 
 Local smoke (synthesizes its own corpus):
 
@@ -41,7 +41,6 @@ def main() -> None:
     ap.add_argument("--out", required=True, help="run directory (stage tables + manifest)")
     ap.add_argument("--run-id", default="run")
     ap.add_argument("--table-format", default=None, choices=["parquet", "iceberg"])
-    ap.add_argument("--n-salts", type=int, default=16, help="salt buckets for hot-entity aggregation")
     ap.add_argument("--lsh", action="store_true", help="enable MinHash-LSH fuzzy alias linking")
     ap.add_argument("--embeddings", action="store_true", help="also build the vector mirror")
     args = ap.parse_args()
@@ -66,10 +65,7 @@ def main() -> None:
     else:
         ap.error("one of --pages / --synth is required")
 
-    tables = run_pipeline(
-        spark, pages, args.out, run_id=args.run_id, n_salts=args.n_salts,
-        use_lsh=args.lsh,
-    )
+    tables = run_pipeline(spark, pages, args.out, run_id=args.run_id, use_lsh=args.lsh)
 
     if args.embeddings:
         from nous_spark.io import idempotent_write

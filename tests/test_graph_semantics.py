@@ -10,6 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from nous_spark.graph import (
+    HAS_FACT,
+    build_fact_tables,
     delete_entity,
     entity_facts,
     entity_neighborhood,
@@ -235,3 +237,78 @@ def test_remove_facts_batch_edge_cases(spark, fixture_tables):
     out2 = remove_facts_from_entities(fixture_tables, bogus)
     assert out2["edges"].count() == fixture_tables["edges"].count()
     assert out2["facts"].count() == fixture_tables["facts"].count()
+
+
+# --------------------------------------------------------------------------
+# HAS_FACT merge: Spark's partial aggregate is the hot-key handling
+# --------------------------------------------------------------------------
+LINKED_SCHEMA = (
+    "entity_id string, pred string, fact_type string, fact_name string, "
+    "fact_id string, confidence double, source_url string, warc_ts timestamp"
+)
+MENTIONS_SCHEMA = (
+    "url string, mention_rank int, id_type string, id_value string, "
+    "entity_id string, warc_ts timestamp"
+)
+
+
+@pytest.fixture(scope="module")
+def hot_triples():
+    """5,000 assertions of ONE (entity, fact, pred) with varied confidence
+    and warc_ts, plus one entity fanning out to 500 distinct facts (each
+    asserted twice)."""
+    rows = [
+        (
+            "eHot", "lives_in", "Location", "Paris", "Location:Paris",
+            ((i * 37) % 1000) / 1000, f"u{i % 50}",
+            TS + dt.timedelta(seconds=(i * 7919) % 5000 + 1),
+        )
+        for i in range(5000)
+    ]
+    rows += [
+        (
+            "eWide", "likes", "Hobby", f"h{j}", f"Hobby:h{j}",
+            ((j * k * 13) % 97) / 100, f"w{j}",
+            TS + dt.timedelta(minutes=(j * 31 + k * 17) % 600),
+        )
+        for j in range(500)
+        for k in (1, 2)
+    ]
+    return rows
+
+
+def _has_fact(spark, rows):
+    linked = spark.createDataFrame(rows, LINKED_SCHEMA).repartition(8)
+    mentions = spark.createDataFrame(
+        [("u0", 0, "email", "hot@x.com", "eHot", TS)], MENTIONS_SCHEMA
+    )
+    edges = build_fact_tables(linked, mentions)["edges"]
+    return edges.filter(F.col("edge_type") == HAS_FACT)
+
+
+def test_has_fact_merge_plan_is_one_exchange_with_partial_agg(spark, hot_triples):
+    """The merge runs as partial max/min per map task, ONE hash exchange,
+    then the final merge — no salt column, no second exchange."""
+    hf = _has_fact(spark, hot_triples)
+    hf.collect()
+    plan = hf._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final, plan
+    assert final.count("Exchange hashpartitioning") == 1, plan
+    assert "partial_max(confidence" in final, plan
+    assert "partial_min(warc_ts" in final, plan
+    assert "_salt" not in plan, plan
+
+
+def test_has_fact_merge_hot_key_equals_python_fold(spark, hot_triples):
+    want: dict[tuple, tuple] = {}
+    for ent, pred, _, _, fid, conf, _, ts in hot_triples:
+        c, t = want.get((ent, fid, pred), (conf, ts))
+        want[(ent, fid, pred)] = (max(c, conf), min(t, ts))
+
+    got = {
+        (r["src"], r["dst"], r["pred"]): (r["confidence"], r["created_at"])
+        for r in _has_fact(spark, hot_triples).collect()
+    }
+    assert len(want) == 501
+    assert got == want

@@ -258,7 +258,13 @@ def test_metrics_token_cost_ledger(spark, tmp_path):
     out = str(tmp_path / "costrun")
     pages = generate_pages(spark, 40, seed=42)
     run_pipeline(spark, pages, out, run_id="cost")
-    rows = {r["stage"]: r for r in spark.read.parquet(f"{out}/metrics").collect()}
+    ledger = spark.read.parquet(f"{out}/metrics")
+    # the ledger's exact column set
+    assert sorted(ledger.columns) == sorted(
+        ["run_id", "stage", "rows_out", "tokens", "cost_usd", "started_at",
+         "finished_at", "status", "error_type"]
+    )
+    rows = {r["stage"]: r for r in ledger.collect()}
     ex = rows["extract"]
     assert ex["tokens"] is not None and ex["tokens"] > 0
     assert isinstance(ex["cost_usd"], Decimal)
