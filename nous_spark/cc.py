@@ -10,6 +10,9 @@ Semantics: returns (id, component) where component is the MINIMUM id in
 each connected component — a deterministic canonical representative.
 
 Scale design:
+  * alias graphs under a row/byte bound are solved by driver-side
+    union-find instead, and come back as an Arrow-built ``LocalRelation``
+    (no pickled RDD, so no Python job downstream);
   * every iteration is two shuffles (groupBy on each endpoint); AQE skew
     handling splits hot components;
   * lineage is cut with ``localCheckpoint`` per iteration so the plan
@@ -23,7 +26,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -88,6 +91,18 @@ def _union_find_local(pairs: list[tuple[str, str]]) -> list[tuple[str, str]]:
     return [(x, find(x)) for x in parent]
 
 
+def _local_frame(spark: SparkSession, mapping: list[tuple[str, str]]) -> DataFrame:
+    """(id, component) rows held on the driver -> a ``LocalRelation``.
+
+    Built from an Arrow table: ``createDataFrame(list)`` would pickle the
+    rows into an RDD that every consumer re-reads through a Python job."""
+    import pyarrow as pa
+
+    ids, comps = zip(*mapping) if mapping else ((), ())
+    table = pa.table({"id": pa.array(ids, pa.string()), "component": pa.array(comps, pa.string())})
+    return spark.createDataFrame(table, "id string, component string")
+
+
 def connected_components(
     edges: DataFrame,
     max_iter: int = 20,
@@ -107,7 +122,8 @@ def connected_components(
     ~8 iterations of shuffle scheduling, a ~10x fixed-cost cut measured
     at local scale. Above it, the large-star/small-star loop runs fully
     distributed. Both paths produce identical (id, min-id) output; tests
-    assert the agreement.
+    assert the agreement. The driver path's result is a ``LocalRelation``
+    (built through Arrow), so joining it starts no Python job.
 
     The driver shortcut is gated in BYTES, not just edge count: the
     union-find builds ~2 Python strings + a tuple + ~2 dict entries per
@@ -141,15 +157,14 @@ def connected_components(
             .collect()
         )
         if not head:
-            return spark.createDataFrame([], "id string, component string")
+            return _local_frame(spark, [])
         if len(head) <= driver_threshold:
             sample = head[: 20_000]
             avg_w = sum(len(r[0]) + len(r[1]) for r in sample) / len(sample)
             est_driver_bytes = int(len(head) * (2 * avg_w + 400))
             if est_driver_bytes <= driver_max_bytes:
                 pairs = [(r[0], r[1]) for r in head]
-                mapping = _union_find_local(pairs)
-                return spark.createDataFrame(mapping, "id string, component string")
+                return _local_frame(spark, _union_find_local(pairs))
         del head  # too big for the driver — fall through to distributed
 
     # persist: the symmetrized alias-edge plan (upstream: co-occurrence
@@ -159,7 +174,7 @@ def connected_components(
     e = _symmetrize(edges).persist()
     if not driver_threshold and e.isEmpty():
         e.unpersist()
-        return spark.createDataFrame([], "id string, component string")
+        return _local_frame(spark, [])
 
     e0 = e  # unpersist the input cache once the loop owns checkpointed copies
     prev_sig = None

@@ -27,14 +27,20 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_FORMAT = os.environ.get("NOUS_TABLE_FORMAT", "parquet")
 
 
-def read_table(spark: SparkSession, target: str, fmt: str | None = None) -> DataFrame:
+def read_table(
+    spark: SparkSession, target: str, fmt: str | None = None, schema: StructType | None = None
+) -> DataFrame:
+    """``schema`` (parquet) skips inference, which runs a footer-reading
+    Spark job per read; iceberg tables carry their own schema."""
     fmt = fmt or TABLE_FORMAT
     if fmt == "parquet":
-        return spark.read.parquet(target)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(target)
     if fmt == "iceberg":
         return spark.read.format("iceberg").load(target)
     raise ValueError(f"unknown table format: {fmt}")

@@ -24,27 +24,18 @@ No step collects to the driver.
 
 from __future__ import annotations
 
-import uuid
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from nous_spark.cc import connected_components
-from nous_spark.normalize import ENTITY_NS
-
-# vectorized uuid5 anchor minting (Arrow-batched; uuid5 has no JVM builtin)
-@F.pandas_udf(T.StringType())
-def anchor_id_udf(key: pd.Series) -> pd.Series:
-    return key.map(lambda k: str(uuid.uuid5(ENTITY_NS, k)))
+from nous_spark.normalize import ENTITY_NS, uuid5_col
 
 
 def with_anchor_id(mentions: DataFrame) -> DataFrame:
     """mentions(url, id_type, id_value) -> + entity_key, anchor_id."""
     return mentions.withColumn(
         "entity_key", F.concat_ws(":", "id_type", "id_value")
-    ).withColumn("anchor_id", anchor_id_udf(F.col("entity_key")))
+    ).withColumn("anchor_id", uuid5_col(ENTITY_NS, F.col("entity_key")))
 
 
 def cooccurrence_alias_edges(mentions_with_anchor: DataFrame) -> DataFrame:
@@ -83,8 +74,8 @@ def cooccurrence_alias_edges_from_arrays(docs: DataFrame) -> DataFrame:
     table on url, which at web scale shuffles the full corpus twice to
     recover information the array row already held. The only shuffle
     here is the final distinct over emitted key pairs (bounded by the
-    number of alias assertions, not corpus size); the uuid5 anchor UDF
-    runs on the deduped pairs only. Output contract identical to
+    number of alias assertions, not corpus size); the uuid5 anchors are
+    minted on the deduped pairs only. Output contract identical to
     ``cooccurrence_alias_edges`` (tested equal).
     """
     keys = F.transform(
@@ -105,8 +96,8 @@ def cooccurrence_alias_edges_from_arrays(docs: DataFrame) -> DataFrame:
     # no second dedup after minting: uuid5 is a pure function of the key,
     # so distinct key pairs are already distinct anchor pairs
     return pairs.select(
-        anchor_id_udf(F.col("src_key")).alias("src"),
-        anchor_id_udf(F.col("dst_key")).alias("dst"),
+        uuid5_col(ENTITY_NS, F.col("src_key")).alias("src"),
+        uuid5_col(ENTITY_NS, F.col("dst_key")).alias("dst"),
     )
 
 
@@ -296,8 +287,8 @@ def canonical_mapping(
     )
     if alias_dict is not None:
         pairs = alias_dict.select(
-            anchor_id_udf(F.col("entity_key_a")).alias("src"),
-            anchor_id_udf(F.col("entity_key_b")).alias("dst"),
+            uuid5_col(ENTITY_NS, F.col("entity_key_a")).alias("src"),
+            uuid5_col(ENTITY_NS, F.col("entity_key_b")).alias("dst"),
         )
         edges = edges.unionByName(pairs).dropDuplicates(["src", "dst"])
     if use_lsh:
@@ -308,9 +299,8 @@ def canonical_mapping(
 
     comp = connected_components(edges)  # (id, component) — component = min id
     # entity_key rides along (1:1 with anchor_id by uuid5 construction):
-    # downstream joins can then equi-join on the PLAIN key, JVM-side,
-    # instead of re-minting uuid5 anchors through a Python UDF pass
-    # (pipeline.stage_link does — one less PythonRunner per run).
+    # downstream joins can then equi-join on the PLAIN key instead of
+    # re-minting uuid5 anchors per triple (pipeline.stage_link does).
     anchors = mentions_with_anchor.select("anchor_id", "entity_key").dropDuplicates(
         ["anchor_id"]
     )

@@ -75,6 +75,26 @@ def entity_id_for(id_type: str, id_value: str) -> str:
     return str(uuid.uuid5(ENTITY_NS, entity_key(id_type, id_value)))
 
 
+def uuid5_col(namespace: uuid.UUID, name: Column) -> Column:
+    """Column twin of ``str(uuid.uuid5(namespace, name))``, JVM-side.
+
+    RFC 4122 §4.3: sha1 over namespace bytes + UTF-8 name, first 16
+    bytes as 32 hex chars; the version nibble (char 13) becomes '5' and
+    the variant nibble (char 17) keeps its low 2 bits under '10'
+    (0-f -> 8,9,a,b repeating). Pinned equal to the stdlib in
+    tests/test_properties.py."""
+    h = F.sha1(F.concat(F.unhex(F.lit(namespace.hex)), F.encode(name, "UTF-8")))
+    variant = F.translate(F.substring(h, 17, 1), "0123456789abcdef", "89ab89ab89ab89ab")
+    return F.concat_ws(
+        "-",
+        F.substring(h, 1, 8),
+        F.substring(h, 9, 4),
+        F.concat(F.lit("5"), F.substring(h, 14, 3)),
+        F.concat(variant, F.substring(h, 18, 3)),
+        F.substring(h, 21, 12),
+    )
+
+
 def point_id_for(tenant_id: str, entity_id: str, verb: str, fid: str) -> str:
     """Deterministic vector point id — uuid5 of
     f"{tenant}:{entity}:{verb}:{fact_id}" (qdrant_repository.py:63-78)."""

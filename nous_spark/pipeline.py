@@ -10,12 +10,18 @@ table; Iceberg would swap in via the same writer seam — sources/io.py):
         ──materialize──> graph/{nodes,identifiers,facts,sources,edges}
 
 Resumability (north_rule): a ``_manifest.json`` in the run directory
-records completed stages; re-running skips them and re-reads their
-parquet output — combined with idempotent (dedup-keyed) writes, a
-killed-and-restarted run produces byte-identical tables with zero
-duplicate rows. Per-stage metrics rows (rows_out/tokens/wall) land in
-``metrics/`` and per-partition lineage rows in ``lineage/`` — the analog
-of the reference's token_usage_events ledger (usage/models.py:16-63).
+records each completed stage's row count and read-back schema;
+re-running skips a stage whose table still holds those rows and
+re-reads its parquet output with that schema (no inference job) —
+combined with idempotent (dedup-keyed) writes, a killed-and-restarted
+run produces byte-identical tables with zero duplicate rows. Per-stage
+metrics rows (rows_out/tokens/wall, or status='failed' + error_type)
+land in ``metrics/`` and per-partition lineage rows in ``lineage/`` —
+the analog of the reference's token_usage_events ledger
+(usage/models.py:16-63).
+
+Only ``stage_extract`` evaluates Python; every later stage is JVM-only
+(tests/test_pipeline.py pins the plans).
 """
 
 from __future__ import annotations
@@ -27,6 +33,7 @@ import time
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from nous_spark.extraction.html import extract_text_str
 from nous_spark.extraction.mentions import extract_mentions_text
@@ -197,6 +204,49 @@ def stage_link(docs: DataFrame, mapping: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 # run orchestration: checkpoints, resume, metrics
 # --------------------------------------------------------------------------
+def _readback_schema(schema: StructType, partition_by: list[str] | None) -> StructType:
+    """The schema ``spark.read.parquet`` infers for a table written from
+    ``schema``: file sources read every field (nested ones too) as
+    nullable, and hive partition columns come last."""
+
+    def nullable(t: dict | str) -> dict | str:
+        if not isinstance(t, dict):
+            return t
+        if t["type"] == "struct":
+            return {**t, "fields": [{**f, "nullable": True, "type": nullable(f["type"])} for f in t["fields"]]}
+        if t["type"] == "array":
+            return {**t, "elementType": nullable(t["elementType"]), "containsNull": True}
+        if t["type"] == "map":
+            return {
+                **t,
+                "keyType": nullable(t["keyType"]),
+                "valueType": nullable(t["valueType"]),
+                "valueContainsNull": True,
+            }
+        return t
+
+    parts = partition_by or []
+    fields = [f for f in schema.fields if f.name not in parts] + [schema[c] for c in parts]
+    return StructType.fromJson(nullable(StructType(fields).jsonValue()))
+
+
+def _footer_rows(path: str) -> int | None:
+    """Rows in a parquet table directory by its footers (hive partition
+    subdirectories included); None when a data file is unreadable."""
+    import pyarrow.parquet as pq
+
+    total = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                try:
+                    total += pq.read_metadata(os.path.join(root, f)).num_rows
+                except (OSError, ValueError):  # truncated / not parquet
+                    return None
+    return total
+
+
 class Run:
     """A checkpointed pipeline run rooted at ``out_dir``."""
 
@@ -225,15 +275,30 @@ class Run:
         os.replace(tmp, self.manifest_path)
 
     def done(self, stage: str) -> bool:
-        return stage in self.manifest["stages"]
+        """Resume trusts a manifest entry only when the table backs it: a
+        ``_SUCCESS`` marker and parquet footers summing to the recorded
+        row count (read driver-side with pyarrow, no Spark job). A stage
+        whose output was deleted or truncated after its entry was
+        written is recomputed."""
+        entry = self.manifest["stages"].get(stage)
+        if entry is None or "schema" not in entry:
+            return False
+        path = self.path(stage)
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            return False
+        return _footer_rows(path) == entry["rows"]
 
     def path(self, stage: str) -> str:
         return os.path.join(self.out_dir, stage)
 
     def read(self, stage: str) -> DataFrame:
+        """The stage table, read with the schema its manifest entry
+        recorded: a schema-less parquet read runs a footer job to infer
+        it, one serial job per checkpoint."""
         from nous_spark.io import read_table
 
-        return read_table(self.spark, self.path(stage))
+        schema = StructType.fromJson(self.manifest["stages"][stage]["schema"])
+        return read_table(self.spark, self.path(stage), schema=schema)
 
     def checkpoint(
         self,
@@ -253,7 +318,8 @@ class Run:
         token sum on the same Observation, and ``operation`` prices it
         at write time (pricing.py, F7/G4): the stage's metrics row then
         carries (tokens, cost_usd DECIMAL(18,8)) like the reference's
-        token_usage_events ledger.
+        token_usage_events ledger. A write that raises leaves a
+        ``status='failed'`` row naming the exception type, then re-raises.
         """
         if self.done(stage):
             return self.read(stage)
@@ -262,7 +328,6 @@ class Run:
 
         from nous_spark.io import write_table
 
-        path = self.path(stage)
         # row count (+ token sum) piggybacks on the write job via the
         # Observation API — no separate count job per stage (driver-serial
         # jobs are the scaling-efficiency tax at small corpus sizes).
@@ -270,13 +335,17 @@ class Run:
         metrics_exprs = [F.count(F.lit(1)).alias("rows")]
         if tokens_col is not None:
             metrics_exprs.append(F.sum(tokens_col).alias("tokens"))
-        write_table(
-            df.observe(obs, *metrics_exprs),
-            path,
-            mode="overwrite",
-            partition_by=partition_by,
-        )
-        got = obs.get
+        try:
+            write_table(
+                df.observe(obs, *metrics_exprs),
+                self.path(stage),
+                mode="overwrite",
+                partition_by=partition_by,
+            )
+            got = obs.get
+        except Exception as e:
+            self._ledger(stage, t0, status="failed", error_type=type(e).__name__)
+            raise
         rows_out = int(got["rows"])
         tokens = int(got["tokens"]) if tokens_col is not None and got.get("tokens") is not None else None
         cost = None
@@ -284,7 +353,28 @@ class Run:
             from nous_spark.pricing import cost_usd
 
             cost = cost_usd(operation, tokens)
-        out = self.read(stage)
+        entry = {
+            "rows": rows_out,
+            "schema": _readback_schema(df.schema, partition_by).jsonValue(),
+            "finished": time.time(),
+        }
+        self._ledger(stage, t0, rows_out=rows_out, tokens=tokens, cost=cost)
+        with self._lock:
+            self.manifest["stages"][stage] = entry
+            self._save_manifest()
+        return self.read(stage)
+
+    def _ledger(
+        self,
+        stage: str,
+        t0: float,
+        rows_out: int | None = None,
+        tokens: int | None = None,
+        cost=None,
+        status: str = "ok",
+        error_type: str | None = None,
+    ) -> None:
+        """One metrics row for a stage that ran in this invocation."""
         with self._lock:
             self.metrics.append(
                 {
@@ -295,13 +385,10 @@ class Run:
                     "cost_usd": cost,
                     "started_at": dt.datetime.fromtimestamp(t0, dt.timezone.utc),
                     "finished_at": dt.datetime.now(dt.timezone.utc),
-                    "status": "ok",
-                    "error_type": None,
+                    "status": status,
+                    "error_type": error_type,
                 }
             )
-            self.manifest["stages"][stage] = {"rows": rows_out, "finished": time.time()}
-            self._save_manifest()
-        return out
 
     def write_lineage(self, stage: str, df: DataFrame) -> None:
         """Per-partition lineage rows for a materialized stage.
@@ -391,7 +478,20 @@ def run_pipeline(
     graph-per-tenant (SURVEY.md §1.3); at 10^12 docs each tenant's
     queries prune to its partition directories."""
     run = Run(spark, out_dir, run_id)
+    try:
+        return _run_stages(run, pages, alias_dict, tenant_id, use_lsh)
+    finally:
+        # failed stages leave ledger rows too (Run.checkpoint)
+        run.flush_metrics()
 
+
+def _run_stages(
+    run: Run,
+    pages: DataFrame,
+    alias_dict: DataFrame | None,
+    tenant_id: str | None,
+    use_lsh: bool,
+) -> dict[str, DataFrame]:
     # the extract stage is the pipeline's provider-call analog (G1):
     # token-count its output text and price it into the metrics ledger
     docs = run.checkpoint(
@@ -469,5 +569,4 @@ def run_pipeline(
             lineage_fut.result()
     finally:
         mentions_mapped.unpersist()
-    run.flush_metrics()
     return out

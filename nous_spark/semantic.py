@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from nous_spark.graph import HAS_FACT, find_entity_by_identifier
-from nous_spark.normalize import point_id_for, synthetic_sentence_col
+from nous_spark.normalize import POINT_NS, point_id_for, synthetic_sentence_col, uuid5_col
 from nous_spark.schemas import EMBEDDING_DIM
 
 # ---------------------------------------------------------------------------
@@ -87,17 +87,6 @@ def embed_udf(dim: int = EMBEDDING_DIM):
     return _embed
 
 
-@F.pandas_udf(T.StringType())
-def _point_id_udf(key: pd.Series) -> pd.Series:
-    """uuid5 point id over 'tenant:entity:verb:fact_id' (qdrant_repository.py:63-78)."""
-
-    def mk(k: str) -> str:
-        tenant, entity, verb, fid = k.split("\x1f", 3)
-        return point_id_for(tenant, entity, verb, fid)
-
-    return key.map(mk)
-
-
 # ---------------------------------------------------------------------------
 # embeddings table build (A4/A5 sink analog)
 # ---------------------------------------------------------------------------
@@ -120,11 +109,12 @@ def build_embeddings(
     )
     with_fact = hf.join(facts, "fact_id")  # size decided by AQE (module note)
     sent = synthetic_sentence_col(F.col("verb"), F.col("fact_type"), F.col("name"))
-    key = F.concat_ws("\x1f", F.lit(tenant_id), "entity_id", "verb", "fact_id")
+    # normalize.point_id_for's key, minted JVM-side (qdrant_repository.py:63-78)
+    key = F.concat_ws(":", F.lit(tenant_id), "entity_id", "verb", "fact_id")
     return (
         with_fact.withColumn("sentence", sent)
         .select(
-            _point_id_udf(key).alias("point_id"),
+            uuid5_col(POINT_NS, key).alias("point_id"),
             embed_udf(dim)(F.col("sentence")).alias("vector"),
             F.lit(tenant_id).alias("tenant_id"),
             "entity_id",

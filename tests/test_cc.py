@@ -59,3 +59,12 @@ def test_driver_and_distributed_paths_agree(spark):
     fast = _components(spark, edges)  # driver union-find (under threshold)
     slow = _components(spark, edges, driver_threshold=0)  # forced distributed
     assert fast == slow
+
+
+def test_driver_path_result_is_a_local_relation(spark):
+    """The driver path's result is an Arrow-built LocalRelation, not a
+    pickled RDD that each consumer re-reads through a Python job."""
+    for edges in ([("b", "a"), ("c", "b")], []):
+        df = spark.createDataFrame(edges, "src string, dst string")
+        plan = connected_components(df)._jdf.queryExecution().analyzed().toString()
+        assert plan.startswith("LocalRelation"), plan

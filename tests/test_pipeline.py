@@ -273,3 +273,106 @@ def test_metrics_token_cost_ledger(spark, tmp_path):
     # stages with no provider-call analog stay NULL, not zero
     assert rows["mentions"]["tokens"] is None
     assert rows["mentions"]["cost_usd"] is None
+
+
+# Python-evaluating physical operators: ArrowEvalPython/BatchEvalPython
+# (UDFs) and the MapInPandas/FlatMapGroupsInPandas/MapInArrow family
+PYTHON_NODES = ("EvalPython", "InPandas", "InArrow")
+
+
+def test_only_extract_evaluates_python(spark, run_dir, tables):
+    """Every stage after extract runs JVM-only: a uuid5 or CC result that
+    silently fell back to a Python UDF or a pickled RDD would cost a
+    Python job per stage again."""
+    from nous_spark.graph import build_entity_tables, build_fact_tables
+    from nous_spark.linking import cooccurrence_alias_edges_from_arrays
+    from nous_spark.pipeline import stage_canonical, stage_link, stage_mentions
+
+    docs = spark.read.parquet(f"{run_dir}/extract")
+    mentions = spark.read.parquet(f"{run_dir}/mentions")
+    mapping = spark.read.parquet(f"{run_dir}/canonical")
+    linked = spark.read.parquet(f"{run_dir}/triples")
+    mm = mentions.join(mapping, "anchor_id").select(
+        "url", "mention_rank", "id_type", "id_value", "entity_id", "warc_ts"
+    )
+    frames = {
+        "mentions": stage_mentions(docs),
+        "alias_edges": cooccurrence_alias_edges_from_arrays(docs),  # CC's input
+        "canonical": stage_canonical(mentions, docs=docs),
+        "link": stage_link(docs, mapping),
+        **{f"entity_{k}": v for k, v in build_entity_tables(mm).items()},
+        **{f"fact_{k}": v for k, v in build_fact_tables(linked, mm).items()},
+    }
+    for name, df in frames.items():
+        assert df.collect(), name
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert not [n for n in PYTHON_NODES if n in plan], (name, plan)
+
+
+def _jobs_started(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` starts on this thread. The status
+    tracker is fed by the asynchronous listener bus, so a marker job in
+    a second group is awaited first: once it is visible, every earlier
+    job is too."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group, marker = f"probe-{uuid.uuid4()}", f"marker-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(marker, marker)
+        spark.range(1).collect()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.time() + 30
+    while not sc.statusTracker().getJobIdsForGroup(marker) and time.time() < deadline:
+        time.sleep(0.05)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_checkpoint_readback_starts_no_job(spark, tmp_path):
+    """Run.read hands back every stage (the tenant-partitioned graph
+    tables included) with the schema a schema-inferring read would find,
+    without the footer job that inference runs."""
+    from nous_spark.pipeline import Run
+
+    out = str(tmp_path / "readback")
+    pages = generate_pages(spark, 60, seed=42)
+    tables = run_pipeline(spark, pages, out, run_id="rb", tenant_id="acme")
+    run = Run(spark, out, "rb")
+    stages = ["extract", "mentions", "canonical", "triples"] + [f"graph_{t}" for t in tables]
+    for stage in stages:
+        holder = []
+        assert _jobs_started(spark, lambda: holder.append(run.read(stage).schema)) == [], stage
+        assert holder[0] == spark.read.parquet(run.path(stage)).schema, stage
+    for name, df in tables.items():
+        assert df.schema == spark.read.parquet(run.path(f"graph_{name}")).schema, name
+    # the probe sees the job a schema-less read starts
+    assert _jobs_started(spark, lambda: spark.read.parquet(run.path("mentions")))
+
+
+def test_failed_stage_lands_in_ledger(spark, tmp_path, monkeypatch):
+    """A checkpoint whose write raises leaves a status='failed' ledger row
+    naming the exception type, re-raises, and the ledger is still
+    flushed with the stages that finished."""
+    from nous_spark import pipeline
+
+    real_link = pipeline.stage_link
+
+    def failing_link(docs, mapping):
+        return real_link(docs, mapping).withColumn("pred", F.raise_error(F.lit("failed on purpose")))
+
+    monkeypatch.setattr(pipeline, "stage_link", failing_link)
+    out = str(tmp_path / "failrun")
+    pages = generate_pages(spark, 30, seed=42)
+    with pytest.raises(Exception) as exc:
+        run_pipeline(spark, pages, out, run_id="f")
+    ledger = {r["stage"]: r for r in spark.read.parquet(f"{out}/metrics").collect()}
+    failed = ledger["triples"]
+    assert (failed["status"], failed["error_type"]) == ("failed", exc.type.__name__)
+    assert failed["rows_out"] is None and failed["started_at"] <= failed["finished_at"]
+    for stage in ("extract", "mentions", "canonical"):
+        assert (ledger[stage]["status"], ledger[stage]["error_type"]) == ("ok", None)
+    assert "triples" not in pipeline.Run(spark, out, "f").manifest["stages"]

@@ -119,6 +119,41 @@ def test_normalize_python_column_agreement(spark, values):
         assert row["v"] == v.strip().lower()
 
 
+# the separator, NUL, Python-only whitespace (\x1c-\x1f, NBSP, U+3000),
+# case-folding traps and astral characters, mixed into arbitrary text
+UUID_KEYS = st.text(
+    alphabet=st.one_of(
+        st.sampled_from(
+            [":", "\x00", "\x1c", "\x1d", "\x1e", "\x1f", "\xa0", "　",
+             "İ", "ſ", "ı", "K", "😀", "\U0001d518", "\U0010fffd"]
+        ),
+        st.characters(blacklist_categories=("Cs",)),
+    ),
+    max_size=40,
+)
+
+
+@given(st.lists(UUID_KEYS, min_size=1, max_size=40))
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_uuid5_column_matches_stdlib(spark, keys):
+    """The JVM uuid5 mints the ids the stdlib does, in both namespaces
+    (entity anchors and vector point ids)."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from nous_spark.normalize import ENTITY_NS, POINT_NS, uuid5_col
+
+    keys = ["", ":"] + keys
+    df = spark.createDataFrame([(k,) for k in keys], "k string")
+    got = df.select(
+        uuid5_col(ENTITY_NS, F.col("k")).alias("e"), uuid5_col(POINT_NS, F.col("k")).alias("p")
+    ).collect()
+    for row, k in zip(got, keys):
+        assert row["e"] == str(uuid.uuid5(ENTITY_NS, k)), k
+        assert row["p"] == str(uuid.uuid5(POINT_NS, k)), k
+
+
 # ------------------------------------------------------- codec round trips
 @given(
     st.integers(min_value=1, max_value=12),
