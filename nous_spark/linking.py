@@ -10,25 +10,28 @@ replaced by three embarrassingly-parallel / bulk steps:
      (same observable contract as the reference's idempotent create);
   2. **alias edges**: pairs of identifiers asserted to be the same
      entity — (a) co-occurrence on one page (the batch analog of one
-     request carrying an identifier for content that names another), and
+     request carrying an identifier for content that names another),
      (b) an optional curated alias dictionary (broadcast-joined: it is
-     small-dimension data);
+     small-dimension data), and (c) optional MinHash-LSH fuzzy aliases
+     between near-identical values of one identifier type;
   3. **canonicalize**: connected components over the alias graph
      (nous_spark.cc) elect one canonical id per component; every mention
      is rewritten anchor -> canonical.
 
-Scale notes: step 1 is a map; step 2's self-join is per-page (bounded
-fan-out); step 3 is the iterative CC with per-iteration checkpointing.
-No step collects to the driver.
+Scale notes: step 1 is a map; step 2(a) pairs each page's mentions
+array map-side (no shuffle before the pair dedup), 2(c) runs on the
+same minhash, banding and hot-bucket cap as document near-dup
+(operators/dedup.py), JVM-only; step 3 is the CC of nous_spark.cc.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from nous_spark.cc import connected_components
-from nous_spark.normalize import ENTITY_NS, uuid5_col
+from nous_spark.normalize import ENTITY_NS, py_strip_col, uuid5_col
+from nous_spark.operators.dedup import _band_buckets, _capped_bucket_pairs, minhash_sig_col
 
 
 def with_anchor_id(mentions: DataFrame) -> DataFrame:
@@ -36,32 +39,6 @@ def with_anchor_id(mentions: DataFrame) -> DataFrame:
     return mentions.withColumn(
         "entity_key", F.concat_ws(":", "id_type", "id_value")
     ).withColumn("anchor_id", uuid5_col(ENTITY_NS, F.col("entity_key")))
-
-
-def cooccurrence_alias_edges(mentions_with_anchor: DataFrame) -> DataFrame:
-    """Alias edges from identifiers co-occurring on the same page.
-
-    The subject (first mention) is paired with every other mention of the
-    page. Pages with a single mention emit nothing. Returns (src, dst)
-    anchor-id pairs, deduped.
-
-    This form takes the EXPLODED mentions table and must re-group by url
-    (a full-table shuffle join). When the array-form docs table is at
-    hand, prefer ``cooccurrence_alias_edges_from_arrays`` — identical
-    output, zero shuffle before the final pair dedup.
-    """
-    first = mentions_with_anchor.filter(F.col("mention_rank") == 0).select(
-        "url", F.col("anchor_id").alias("src")
-    )
-    rest = mentions_with_anchor.filter(F.col("mention_rank") > 0).select(
-        "url", F.col("anchor_id").alias("dst")
-    )
-    return (
-        first.join(rest, "url")
-        .select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
 
 
 def cooccurrence_alias_edges_from_arrays(docs: DataFrame) -> DataFrame:
@@ -75,8 +52,8 @@ def cooccurrence_alias_edges_from_arrays(docs: DataFrame) -> DataFrame:
     recover information the array row already held. The only shuffle
     here is the final distinct over emitted key pairs (bounded by the
     number of alias assertions, not corpus size); the uuid5 anchors are
-    minted on the deduped pairs only. Output contract identical to
-    ``cooccurrence_alias_edges`` (tested equal).
+    minted on the deduped pairs only. Tested equal to the exploded-table
+    url self-join (tests/test_linking.py).
     """
     keys = F.transform(
         "mentions", lambda m: F.concat_ws(":", m["id_type"], m["id_value"])
@@ -104,174 +81,114 @@ def cooccurrence_alias_edges_from_arrays(docs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # MinHash-LSH blocking + similarity-scored candidate ranking (north_star)
 # ---------------------------------------------------------------------------
-def _char_shingles(value: str, k: int = 3) -> set[str]:
-    """Char k-grams of '^value$' (lowered) — the blocking feature space."""
-    s = f"^{value.strip().lower()}$"
-    if len(s) <= k:
-        return {s}
-    return {s[i : i + k] for i in range(len(s) - k + 1)}
+# 32 hashes in 16 bands of r=2: a pair at sim 0.5 shares a bucket with
+# probability 1-(1-0.5^2)^16 >= 0.99, at sim 0.85 all but ~1e-9
+_LSH_HASHES, _LSH_BANDS, _LSH_SEED = 32, 16, 42
+_SHINGLE_K = 3
+_LSH_MAX_BUCKET = 64
+_LSH_TOP_M = 3
 
 
-def identifier_signatures(
-    identifiers: DataFrame,
-    n_hashes: int = 32,
-    shingle_k: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """(anchor_id, id_type, id_value, sig array<long>) — numpy minhash over
-    char shingles, one Arrow batch at a time. Fixed seed => deterministic
-    across runs and parallelism levels (resumability contract)."""
-    import zlib
-
-    import numpy as np
-
-    mersenne = (1 << 61) - 1
-    rng = np.random.RandomState(seed)
-    a = rng.randint(1, mersenne, size=n_hashes, dtype=np.int64)
-    b = rng.randint(0, mersenne, size=n_hashes, dtype=np.int64)
-
-    def gen(batches):
-        for pdf in batches:
-            sigs = []
-            for v in pdf["id_value"]:
-                sh = np.fromiter(
-                    (zlib.crc32(g.encode("utf-8")) for g in _char_shingles(v or "", shingle_k)),
-                    dtype=np.int64,
+def _value_shingles(value: Column) -> Column:
+    """Distinct char k-grams of '^' + lower(strip(value)) + '$' (NULL is
+    ''), the blocking and scoring feature space. A string shorter than k
+    is its own single shingle."""
+    s = F.concat(
+        F.lit("^"), F.lower(py_strip_col(F.coalesce(value, F.lit("")))), F.lit("$")
+    )
+    # bind the normalized string once (1-element array): a lambda body
+    # is not CSE'd, so `s` inline would re-run the strip regex per gram
+    return F.element_at(
+        F.transform(
+            F.array(s),
+            lambda v: F.array_distinct(
+                F.transform(
+                    F.sequence(F.lit(1), F.greatest(F.length(v) - (_SHINGLE_K - 1), F.lit(1))),
+                    lambda i: v.substr(i, F.lit(_SHINGLE_K)),
                 )
-                vals = (a[:, None] * sh[None, :] + b[:, None]) % mersenne
-                sigs.append(vals.min(axis=1).tolist())
-            out = pdf[["anchor_id", "id_type", "id_value"]].copy()
-            out["sig"] = sigs
-            yield out
-
-    return identifiers.select("anchor_id", "id_type", "id_value").mapInPandas(
-        gen, "anchor_id string, id_type string, id_value string, sig array<long>"
+            ),
+        ),
+        1,
     )
 
 
-def lsh_alias_candidates(
-    mentions_with_anchor: DataFrame,
-    threshold: float = 0.7,
-    n_hashes: int = 32,
-    n_bands: int = 16,  # r=2: blocking recall >=0.99 for sim>=0.5
-    shingle_k: int = 3,
-    seed: int = 42,
-    max_bucket: int = 64,
-    top_m: int = 3,
-) -> DataFrame:
+def lsh_alias_candidates(mentions_with_anchor: DataFrame, threshold: float = 0.7) -> DataFrame:
     """Near-identical identifier values -> similarity-scored alias edges.
 
     The scale path for alias discovery (north_star: "MinHash-LSH blocking
-    and similarity-scored candidate ranking"): instead of an all-pairs
-    O(n^2) compare over 10^9 identifiers, (1) band the minhash signatures
-    and equi-join on (id_type, band, bucket) — only same-type identifiers
-    hashing to a shared bucket ever meet; (2) rank candidates by exact
-    char-shingle Jaccard (computed from the pair's values, Arrow-batched);
-    (3) keep each identifier's top-``top_m`` candidates with sim >=
-    threshold as (src, dst, sim) alias edges feeding CC.
+    and similarity-scored candidate ranking"), JVM-only and built from
+    the document near-dup blocking in operators/dedup.py: instead of an
+    all-pairs O(n^2) compare, (1) minhash each identifier's char
+    shingles (``minhash_sig_col``), band the signatures and pair within
+    (id_type, band, bucket) — only same-type identifiers hashing to a
+    shared bucket ever meet; (2) score each candidate by the exact
+    shingle Jaccard; (3) keep each identifier's top-``_LSH_TOP_M``
+    candidates (sim desc, dst asc) with sim >= threshold as (src, dst,
+    sim) alias edges feeding CC, src < dst.
 
     Two skew defenses, both load-bearing (measured: without them a corpus
     of templated identifiers — personaNNNN@example.com — makes the
     candidate join quadratic, ~10^8 pairs from 26k identifiers, and the
     stage never finishes):
-      * ``max_bucket``: buckets holding more than this many identifiers
-        are DROPPED before the self-join. A huge bucket is a shared
-        template/domain pattern, not alias evidence — and any true alias
-        pair also collides in some small bucket with probability
-        1-(1-s^r)^(b-hot) (near 1 for high sim). Bounds the join at
-        max_bucket^2 per bucket.
-      * ``top_m`` ranking: a real identity has a handful of spelling
+      * the hot-bucket cap (``_capped_bucket_pairs``, shared by every
+        blocking operator): a bucket holding more than ``_LSH_MAX_BUCKET``
+        identifiers star-chains each member to the bucket's min id
+        instead of self-joining, so the join is bounded by the cap;
+        every candidate is scored exactly, so star pairs only add true
+        pairs;
+      * top-m ranking: a real identity has a handful of spelling
         variants; capping candidates per anchor stops one identifier
         from fanning into thousands of CC edges.
     """
-    uniq = mentions_with_anchor.select(
-        "anchor_id", "id_type", "id_value"
-    ).dropDuplicates(["anchor_id"])
-    sigs = identifier_signatures(uniq, n_hashes, shingle_k, seed)
-    r = n_hashes // n_bands
-
-    # persisted for the duration of this function only: the bucket-size
-    # scan and both self-join sides read it; the eager localCheckpoint of
-    # the (small, top-m-capped) result below lets us unpersist before
-    # returning, so repeated operator calls in a long-lived session don't
-    # accumulate cached band tables in executor storage.
-    bands = sigs.select(
-        "anchor_id",
-        "id_type",
-        "id_value",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_bands - 1)),
-                lambda i: F.xxhash64(F.slice("sig", i * r + 1, r).cast("string")),
-            )
-        ).alias("band", "bucket"),
-    ).persist()
-    small_buckets = (
-        bands.groupBy("id_type", "band", "bucket")
-        .agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") <= max_bucket)
-        .drop("_n")
-    )
-    bands_ok = bands.join(small_buckets, ["id_type", "band", "bucket"], "left_semi")
-    a_side, b_side = bands_ok.alias("a"), bands_ok.alias("b")
-    cands = (
-        a_side.join(
-            b_side,
-            (F.col("a.id_type") == F.col("b.id_type"))
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.anchor_id") < F.col("b.anchor_id")),
-        )
-        .select(
-            F.col("a.anchor_id").alias("src"),
-            F.col("a.id_value").alias("value_a"),
-            F.col("b.anchor_id").alias("dst"),
-            F.col("b.id_value").alias("value_b"),
-        )
-        .dropDuplicates(["src", "dst"])
-    )
-
-    def score(batches):
-        for pdf in batches:
-            sims = []
-            for va, vb in zip(pdf["value_a"], pdf["value_b"]):
-                sa, sb = _char_shingles(va or "", shingle_k), _char_shingles(vb or "", shingle_k)
-                inter = len(sa & sb)
-                sims.append(inter / (len(sa) + len(sb) - inter) if inter else 0.0)
-            out = pdf[["src", "dst"]].copy()
-            out["sim"] = sims
-            yield out
-
-    scored = cands.mapInPandas(score, "src string, dst string, sim double").filter(
-        F.col("sim") >= threshold
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("src").orderBy(F.desc("sim"), F.asc("dst"))
-    out = (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= top_m)
-        .drop("_rk")
+    # persisted for the duration of this function only: banding (the
+    # bucket-size scan and both self-join sides) and both scoring sides
+    # read it; the eager localCheckpoint of the (small, top-m-capped)
+    # result below lets us unpersist before returning, so repeated calls
+    # in a long-lived session don't accumulate cached tables
+    idents = (
+        mentions_with_anchor.select("anchor_id", "id_type", "id_value")
+        .dropDuplicates(["anchor_id"])
+        .select("anchor_id", "id_type", _value_shingles(F.col("id_value")).alias("sh"))
+        .withColumn("sig", minhash_sig_col(F.col("sh"), _LSH_HASHES, _LSH_SEED))
+        .persist()
     )
     try:
+        cands = _capped_bucket_pairs(
+            _band_buckets(idents, "anchor_id", _LSH_BANDS, _LSH_HASHES, carry=("id_type",)),
+            ["id_type", "band", "bucket"],
+            "anchor_id",
+            _LSH_MAX_BUCKET,
+        )
+        sa = idents.select(F.col("anchor_id").alias("id_a"), F.col("sh").alias("sh_a"))
+        sb = idents.select(F.col("anchor_id").alias("id_b"), F.col("sh").alias("sh_b"))
+        sim = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b"))
+        w = Window.partitionBy("src").orderBy(F.desc("sim"), F.asc("dst"))
+        out = (
+            cands.join(sa, "id_a")
+            .join(sb, "id_b")
+            .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"), sim.alias("sim"))
+            .filter(F.col("sim") >= threshold)
+            .withColumn("_rk", F.row_number().over(w))
+            .filter(F.col("_rk") <= _LSH_TOP_M)
+            .drop("_rk")
+        )
         return out.localCheckpoint(eager=True)
     finally:
-        bands.unpersist()
+        idents.unpersist()
 
 
 def canonical_mapping(
     mentions_with_anchor: DataFrame,
+    cooccur_edges: DataFrame,
     alias_dict: DataFrame | None = None,
     use_lsh: bool = False,
     lsh_threshold: float = 0.85,
-    cooccur_edges: DataFrame | None = None,
 ) -> DataFrame:
     """Build the anchor_id -> canonical entity_id mapping.
 
     Alias evidence, unioned into one edge list for CC:
-      * co-occurrence on a page (always; pass ``cooccur_edges`` from
-        ``cooccurrence_alias_edges_from_arrays(docs)`` to use the
-        shuffle-free array derivation — the pipeline does);
+      * co-occurrence on a page (``cooccur_edges``, from
+        ``cooccurrence_alias_edges_from_arrays(docs)``);
       * a curated alias dictionary (optional, small — broadcast);
       * MinHash-LSH near-identical identifier values (optional,
         ``use_lsh`` — the web-scale fuzzy-alias path).
@@ -280,11 +197,7 @@ def canonical_mapping(
     themselves — the mapping is TOTAL over observed anchors, so the
     downstream join is a plain inner equi-join.
     """
-    edges = (
-        cooccur_edges
-        if cooccur_edges is not None
-        else cooccurrence_alias_edges(mentions_with_anchor)
-    )
+    edges = cooccur_edges
     if alias_dict is not None:
         pairs = alias_dict.select(
             uuid5_col(ENTITY_NS, F.col("entity_key_a")).alias("src"),

@@ -27,7 +27,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -106,38 +106,17 @@ def dedup_incremental(
     return new_docs.join(fresh, id_col, "left_semi")
 
 
-def minhash_signatures_jvm(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 64,
-    shingle_k: int = 5,
-    seed: int = 42,
-) -> DataFrame:
-    """(id, sig: array<long>) — minhash entirely JVM-side (no Python
-    workers): word k-gram shingles via slide (split/sequence/slice/
-    concat_ws), hash family j = xxhash64(shingle, seed, j), signature =
-    array_min per j.
-
-    Honest A/B at sf0.1 (5k docs, forced evaluation): this path 4.3-5.2s
-    vs 0.75-2.8s for the numpy/Arrow default — higher-order-function
-    lambdas are interpreted per element while numpy gets SIMD matrix
-    ops, so the Arrow path wins despite crossing into Python. Kept as
-    the zero-Python-worker alternative (useful where worker fork/import
-    dominates or Python is unavailable on executors).
-    """
-    words = F.split(F.col(text_col), r"\s+")
-    n = F.greatest(F.size(words) - (shingle_k - 1), F.lit(1))
-    shingles = F.transform(
-        F.sequence(F.lit(0), n - 1),
-        lambda i: F.xxhash64(F.concat_ws(" ", F.slice(words, i + 1, shingle_k))),
-    )
+def minhash_sig_col(shingles: Column, n_hashes: int, seed: int) -> Column:
+    """array<long> minhash of a shingle array, JVM-side: hash family
+    j = xxhash64(shingle, seed, j), signature = array_min per j. The one
+    minhash every JVM blocking path shares (documents here, identifier
+    values in linking.lsh_alias_candidates)."""
     # Bind the shingle array ONCE as a runtime lambda variable (1-element
     # array wrapper): embedding `shingles` directly in all n_hashes
     # lambdas would copy the string-building subtree n_hashes times into
     # the plan — lambda bodies are not common-subexpression-eliminated
     # (measured 64x slowdown without this).
-    sig = F.element_at(
+    return F.element_at(
         F.transform(
             F.array(shingles),
             lambda sh: F.transform(
@@ -149,7 +128,35 @@ def minhash_signatures_jvm(
         ),
         1,
     )
-    return docs.select(F.col(id_col), sig.alias("sig"))
+
+
+def minhash_signatures_jvm(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n_hashes: int = 64,
+    shingle_k: int = 5,
+    seed: int = 42,
+) -> DataFrame:
+    """(id, sig: array<long>) — document minhash entirely JVM-side (no
+    Python workers): word k-gram shingles via slide (split/sequence/
+    slice/concat_ws) fed to ``minhash_sig_col``.
+
+    Honest A/B at sf0.1 (5k docs, forced evaluation): this path 4.3-5.2s
+    vs 0.75-2.8s for the numpy/Arrow default — higher-order-function
+    lambdas are interpreted per element while numpy gets SIMD matrix
+    ops, so the Arrow path wins on documents despite crossing into
+    Python. The identifier alias path (short strings, inside a batch
+    build that evaluates no Python after extract) runs on
+    ``minhash_sig_col``.
+    """
+    words = F.split(F.col(text_col), r"\s+")
+    n = F.greatest(F.size(words) - (shingle_k - 1), F.lit(1))
+    shingles = F.transform(
+        F.sequence(F.lit(0), n - 1),
+        lambda i: F.xxhash64(F.concat_ws(" ", F.slice(words, i + 1, shingle_k))),
+    )
+    return docs.select(F.col(id_col), minhash_sig_col(shingles, n_hashes, seed).alias("sig"))
 
 
 def minhash_signatures(
@@ -224,8 +231,15 @@ def lsh_candidate_pairs(
 
 
 def _band_buckets(
-    signatures: DataFrame, id_col: str, n_bands: int, n_hashes: int | None
+    signatures: DataFrame,
+    id_col: str,
+    n_bands: int,
+    n_hashes: int | None,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
+    """(id, *carry, band, bucket): one row per band of each signature.
+    ``carry`` columns ride along for the caller's bucket key (the
+    identifier path carries id_type, so types never share a bucket)."""
     if n_hashes is None:
         n_hashes = 64  # matches minhash_signatures default
         sig_len_row = signatures.select(F.size("sig").alias("n")).first()
@@ -234,6 +248,7 @@ def _band_buckets(
     r = n_hashes // n_bands
     return signatures.select(
         id_col,
+        *carry,
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(n_bands - 1)),

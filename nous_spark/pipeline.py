@@ -38,7 +38,11 @@ from pyspark.sql.types import StructType
 from nous_spark.extraction.html import extract_text_str
 from nous_spark.extraction.mentions import extract_mentions_text
 from nous_spark.extraction.triples import extract_triples_text
-from nous_spark.linking import canonical_mapping, with_anchor_id
+from nous_spark.linking import (
+    canonical_mapping,
+    cooccurrence_alias_edges_from_arrays,
+    with_anchor_id,
+)
 from nous_spark.normalize import fact_id_col
 
 GRAPH_TABLES = ("nodes", "identifiers", "facts", "sources", "edges")
@@ -128,25 +132,14 @@ def stage_mentions(docs: DataFrame) -> DataFrame:
 
 def stage_canonical(
     mentions: DataFrame,
+    docs: DataFrame,
     alias_dict: DataFrame | None = None,
     use_lsh: bool = False,
-    lsh_threshold: float = 0.85,
-    docs: DataFrame | None = None,
 ) -> DataFrame:
-    """``docs`` (the array-form extract output) enables the shuffle-free
-    co-occurrence derivation (linking.cooccurrence_alias_edges_from_arrays)
-    — the exploded-table fallback re-joins mentions on url."""
-    cooccur = None
-    if docs is not None:
-        from nous_spark.linking import cooccurrence_alias_edges_from_arrays
-
-        cooccur = cooccurrence_alias_edges_from_arrays(docs)
+    """Co-occurrence alias edges come from ``docs`` (the array-form
+    extract output, linking.cooccurrence_alias_edges_from_arrays)."""
     return canonical_mapping(
-        mentions,
-        alias_dict,
-        use_lsh=use_lsh,
-        lsh_threshold=lsh_threshold,
-        cooccur_edges=cooccur,
+        mentions, cooccurrence_alias_edges_from_arrays(docs), alias_dict, use_lsh=use_lsh
     )
 
 
@@ -502,7 +495,7 @@ def _run_stages(
     )
     mentions = run.checkpoint("mentions", stage_mentions(docs))
     mapping = run.checkpoint(
-        "canonical", stage_canonical(mentions, alias_dict, use_lsh=use_lsh, docs=docs)
+        "canonical", stage_canonical(mentions, docs, alias_dict, use_lsh=use_lsh)
     )
 
     # mentions x mapping feeds three of the five graph tables — persist it

@@ -16,6 +16,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory``: ``NOUS_SPARK_DRIVER_MEM`` if set, else a
+    third of the host's MemTotal capped at 48g (48g where ``meminfo``
+    does not exist). In local mode the driver heap is every executor's
+    heap too, so a fixed size larger than the host gets the process
+    killed by the kernel instead of spilling."""
+    env = os.environ.get("NOUS_SPARK_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open(meminfo) as f:
+            kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except FileNotFoundError:
+        return "48g"
+    return f"{min(kib // 3 // 1024, 48 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "nous_spark",
     cores: int | None = None,
@@ -48,7 +65,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("NOUS_SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -34,8 +34,13 @@ from pyspark.sql import functions as F
 
 from nous_spark.graph import build_entity_tables, build_fact_tables
 from nous_spark.io import idempotent_write
-from nous_spark.pipeline import GRAPH_TABLES, stage_extract, stage_link, stage_mentions
-from nous_spark.linking import canonical_mapping
+from nous_spark.pipeline import (
+    GRAPH_TABLES,
+    stage_canonical,
+    stage_extract,
+    stage_link,
+    stage_mentions,
+)
 from nous_spark.schemas import PAGES
 
 # dedup keys per graph table (identity columns — same keys the batch
@@ -71,11 +76,7 @@ def assimilate_batch(
     docs = stage_extract(pages).persist()
     mentions = stage_mentions(docs).persist()
     try:
-        from nous_spark.linking import cooccurrence_alias_edges_from_arrays
-
-        mapping = canonical_mapping(
-            mentions, cooccur_edges=cooccurrence_alias_edges_from_arrays(docs)
-        )
+        mapping = stage_canonical(mentions, docs)
         linked = stage_link(docs, mapping).persist()
         mentions_mapped = (
             mentions.join(mapping, "anchor_id")

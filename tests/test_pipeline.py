@@ -309,6 +309,59 @@ def test_only_extract_evaluates_python(spark, run_dir, tables):
         assert not [n for n in PYTHON_NODES if n in plan], (name, plan)
 
 
+def _sql_plans_run(spark, fn) -> list[str]:
+    """Physical plan descriptions of the SQL executions ``fn()`` runs.
+    Unlike the plan of a returned frame, these include executions an
+    eager ``localCheckpoint`` ran and hid behind a scan of its RDD. The
+    status store is fed by the listener bus, so a marker execution is
+    awaited first: once it is recorded, every earlier one is too."""
+    import time
+    import uuid
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        lst = store.executionsList()
+        return [lst.apply(i) for i in range(lst.size())]
+
+    before = max((e.executionId() for e in executions()), default=-1)
+    fn()
+    marker = f"marker-{uuid.uuid4()}"
+    spark.sparkContext.setJobDescription(marker)
+    try:
+        spark.range(1).collect()
+    finally:
+        spark.sparkContext.setJobDescription(None)
+    deadline = time.time() + 30
+    while time.time() < deadline:
+        new = [e for e in executions() if e.executionId() > before]
+        if any(e.description() == marker for e in new):
+            return [e.physicalPlanDescription() for e in new if e.description() != marker]
+        time.sleep(0.05)
+    raise AssertionError("marker execution never reached the status store")
+
+
+def test_lsh_canonical_evaluates_no_python(spark, run_dir, tables):
+    """``use_lsh=True`` adds the fuzzy-alias blocking and scoring to the
+    canonical stage, all in the JVM: no execution it runs, including
+    the ones behind its eager checkpoint, holds a Python node."""
+    from nous_spark.linking import canonical_mapping, cooccurrence_alias_edges_from_arrays
+
+    docs = spark.read.parquet(f"{run_dir}/extract")
+    mentions = spark.read.parquet(f"{run_dir}/mentions")
+    holder = []
+
+    def build():
+        mapping = canonical_mapping(
+            mentions, cooccur_edges=cooccurrence_alias_edges_from_arrays(docs), use_lsh=True
+        )
+        holder.append(mapping.collect())
+
+    plans = _sql_plans_run(spark, build)
+    assert holder[0] and plans
+    assert [n for p in plans for n in PYTHON_NODES if n in p] == []
+
+
 def _jobs_started(spark, fn) -> list[int]:
     """Ids of the Spark jobs ``fn()`` starts on this thread. The status
     tracker is fed by the asynchronous listener bus, so a marker job in
