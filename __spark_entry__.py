@@ -45,6 +45,7 @@ from nous_spark.operators.text import (
     html_extract_oracle_sql as _html_extract_oracle_sql,
     html_links_oracle_sql as _html_links_oracle_sql,
     lang_id_col,
+    micro_mean_4dp_sql as _micro_mean_4dp_sql,
     quality_columns,
     quality_score_cols,
     token_count_col,
@@ -2292,7 +2293,7 @@ _QUALITY_CLF_SQL = _build_quality_clf_sql()
 
 # DuckDB mirror of text.corpus_lm_nll — shared by the doc_corpus_lm_nll
 # oracle and composed (nested WITH) into doc_ccnet_buckets.
-_LM_NLL_SQL = r"""
+_LM_NLL_SQL = rf"""
     WITH norm AS (
       SELECT doc_id, regexp_replace(lower(text), '[^a-z]+', ' ', 'g') AS s
       FROM documents
@@ -2324,9 +2325,7 @@ _LM_NLL_SQL = r"""
     SELECT d.doc_id,
            coalesce(a.n_bigrams, 0) AS n_bigrams,
            coalesce(a.nll_micro, 0) AS nll_micro,
-           CASE WHEN a.n_bigrams IS NULL THEN NULL
-                ELSE round(a.nll_micro / 1000000.0 / a.n_bigrams, 4)
-           END AS avg_nll
+           {_micro_mean_4dp_sql("a.nll_micro", "a.n_bigrams")} AS avg_nll
     FROM documents d LEFT JOIN agg a USING (doc_id)
 """
 
@@ -2389,9 +2388,7 @@ def _build_dsir_sql(
         SELECT d.doc_id,
                coalesce(sc.n_terms, 0) AS n_terms,
                CAST(coalesce(sc.m, 0) AS BIGINT) AS dsir_micro,
-               CASE WHEN sc.n_terms IS NOT NULL
-                    THEN round(sc.m / 1000000.0 / sc.n_terms, 4) + 0.0 END
-                 AS avg_log_ratio
+               {_micro_mean_4dp_sql("sc.m", "sc.n_terms")} AS avg_log_ratio
         FROM documents d LEFT JOIN sc USING (doc_id)
     """
 
@@ -3798,7 +3795,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         # corpus-trained char-bigram LM, add-one smoothing; per-bigram
         # micro-nats round(-ln P * 1e6) summed as BIGINTs (fold-order
-        # exact); division order in avg_nll matches the Column form
+        # exact); avg_nll is the exact integer 4-dp mean (micro_mean_4dp)
         "doc_corpus_lm_nll": _LM_NLL_SQL,
         # CCNet head/middle/tail: exact per-lang order-statistic
         # thresholds over the lm-nll scores (the nested WITH is the

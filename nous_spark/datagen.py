@@ -76,7 +76,8 @@ DATAGEN_VERSION = 2
 
 
 def html_of(text: str, title: str = "page") -> bytes:
-    """Wrap text as HTML such that extract_text_str round-trips exactly."""
+    """Wrap text as HTML that every fold of ``HTML_STRIP_STEPS`` (Python,
+    Column, DuckDB) turns back into ``text`` exactly."""
     paras = "".join(f"<p>{_html.escape(line)}</p>" for line in text.split("\n"))
     return (
         f"<html><head><title>{_html.escape(title)}</title>"

@@ -1,2 +1,3 @@
-"""Scalar extraction functions fused by pipeline.stage_extract: html->text,
-identifier mentions, OIE triples."""
+"""Scalar extraction functions fused by pipeline.stage_extract: html->text
+(the fold of HTML_STRIP_STEPS, the one HTML->text spec), identifier
+mentions, OIE triples."""

@@ -118,11 +118,15 @@ def clamp_confidence(c: float | None) -> float:
 # str.strip(), which removes every char where str.isspace() is True —
 # including \x1c-\x1f, \x85, NBSP and the Unicode Zs block. Byte-exact
 # parity (found by hypothesis in tests/test_properties.py) requires a
-# regex with exactly Python's whitespace set.
-_PY_SPACE_CLASS = (
-    "[\\t\\n\\x0B\\f\\r\\x1C-\\x1F \\x85\\xA0\\u1680\\u2000-\\u200A"
-    "\\u2028\\u2029\\u202F\\u205F\\u3000]"
+# regex with exactly Python's whitespace set, spelled as literal chars so
+# Java regex, RE2 and Python re read a class of it identically (the
+# HTML -> text whitespace step builds its class from it too).
+PY_SPACE_CHARS = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+    "\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008\u2009\u200a"
+    "\u2028\u2029\u202f\u205f\u3000"
 )
+_PY_SPACE_CLASS = f"[{PY_SPACE_CHARS}]"
 _PY_STRIP_RE = f"^{_PY_SPACE_CLASS}+|{_PY_SPACE_CLASS}+$"
 
 

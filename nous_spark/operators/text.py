@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nous_spark.extraction.html import HTML_STRIP_STEPS
+
 # ---------------------------------------------------------------- counting
 def token_count_col(text: Column) -> Column:
     """Whitespace token count — identical formula to the DuckDB oracle:
@@ -750,47 +752,14 @@ def c4_line_filter_oracle_sql(
 
 
 # ---------------------------------------------------------------- HTML -> text
-# The HTML-stripping step table — an ORDERED chain of transformations the
-# Spark operator, the generated DuckDB oracle, and the pytest pure-Python
-# reference all execute verbatim, so the three engines cannot drift.
-# kind "re" is a regex replace (patterns restricted to the Java-regex ∩
-# RE2 ∩ Python-re common dialect: inline (?is) flags, lazy .*?, no
-# backreferences in patterns or replacements); kind "lit" is a literal
-# substring replace. Ordering is load-bearing: script/style/comment
-# blocks go first (their CONTENT must never leak into text), block-close
-# tags become newlines BEFORE the generic tag strip erases them, and
-# entity unescapes run last with &amp; at the very end so double-encoded
-# '&amp;lt;' decodes to '&lt;', not '<'.
-HTML_STRIP_STEPS: tuple[tuple[str, str, str], ...] = (
-    ("re", r"(?is)<script[^>]*>.*?</script>", " "),
-    ("re", r"(?is)<style[^>]*>.*?</style>", " "),
-    ("re", r"(?s)<!--.*?-->", " "),
-    ("re", r"(?is)<(?:br|hr)[^>]*>", "\n"),
-    (
-        "re",
-        r"(?is)</(?:p|div|h[1-6]|li|ul|ol|tr|table|blockquote|section|article)>",
-        "\n",
-    ),
-    ("re", r"<[^>]*>", " "),
-    ("lit", "&lt;", "<"),
-    ("lit", "&gt;", ">"),
-    ("lit", "&quot;", '"'),
-    ("lit", "&#39;", "'"),
-    ("lit", "&nbsp;", " "),
-    ("lit", "&amp;", "&"),
-    ("re", r"[ \t\r]+", " "),
-)
-
-
 def html_extract(
     docs: DataFrame, id_col: str = "doc_id", html_col: str = "html"
 ) -> DataFrame:
     """HTML-to-text extraction — the upstream-most step of a web-crawl
     pretraining pipeline (WET-style payload -> plain text), as a pure
-    Column chain: run ``HTML_STRIP_STEPS`` in order (drop script/style/
-    comment content, turn block boundaries into newlines, strip tags,
-    unescape the common entities, collapse horizontal whitespace), then
-    canonicalize lines with ``lines_arr_col`` — the ONE line identity
+    Column fold of ``HTML_STRIP_STEPS`` (extraction/html.py, the one
+    HTML -> text spec the pipeline folds in Python), then canonicalize
+    lines with ``lines_arr_col`` — the ONE line identity
     rule shared with c4_line_filter/dedup_lines_corpus, so cleaning and
     dedup downstream agree on what a line is.
 
@@ -825,20 +794,6 @@ def html_extract(
             F.length(raw) > 0, F.round(F.length(text) / F.length(raw), 4)
         ).alias("text_density"),
     )
-
-
-def html_extract_py(html: str | None) -> tuple[str, int, float | None]:
-    """Pure-Python reference of ``html_extract`` (pytest ground truth):
-    the SAME step table via ``re.sub``/``str.replace``. Returns
-    (text, n_lines, text_density)."""
-    raw = html or ""
-    t = raw
-    for kind, pat, rep in HTML_STRIP_STEPS:
-        t = re.sub(pat, rep, t) if kind == "re" else t.replace(pat, rep)
-    lines = [ln for ln in (s.strip(" ") for s in t.split("\n")) if ln]
-    text = "\n".join(lines)
-    density = round(len(text) / len(raw), 4) if raw else None
-    return text, len(lines), density
 
 
 def html_extract_oracle_sql(
@@ -1202,6 +1157,25 @@ def uni_bigram_terms_col(text: Column) -> Column:
     return F.concat(tk, bigrams)
 
 
+def micro_mean_4dp(micro: int, n: int) -> float:
+    """round(micro / 1e6 / n, 4) half away from zero in exact integer
+    arithmetic (a double quotient lands on either side of ties: 7001700/6
+    is 1.167 in Spark and DuckDB, 1.1669 in Python); never -0.0. Python
+    reference of the Column and DuckDB twins below."""
+    q = (2 * abs(micro) + 100 * n) // (200 * n)
+    return (-q if micro < 0 else q) / 1e4
+
+
+def micro_mean_4dp_col(micro: Column, n: Column) -> Column:
+    q = F.call_function("div", 2 * F.abs(micro) + 100 * n, 200 * n)
+    return F.when(micro < 0, -q).otherwise(q) / F.lit(1e4)
+
+
+def micro_mean_4dp_sql(micro: str, n: str) -> str:
+    # DuckDB sign() of an integer is an integer, so a zero quotient stays +0
+    return f"(sign({micro}) * ((2 * abs({micro}) + 100 * {n}) // (200 * {n})) / 1e4)"
+
+
 def dsir_log_ratio_score(
     docs: DataFrame,
     target: DataFrame,
@@ -1232,7 +1206,7 @@ def dsir_log_ratio_score(
     independent, the corpus_lm_nll discipline; round() is half-away-
     from-zero in Spark, DuckDB and Python alike, so the negative
     weights round identically too) and avg_log_ratio =
-    round(dsir_micro/1e6/n_terms, 4), NULL for term-less docs
+    micro_mean_4dp(dsir_micro, n_terms), NULL for term-less docs
     (n_terms 0). NULL text is coalesced to '' on both corpora.
 
     Scale: both count tables aggregate to <= n_buckets rows (map-side
@@ -1297,15 +1271,8 @@ def dsir_log_ratio_score(
             F.col(id_col),
             F.coalesce("n_terms", F.lit(0)).alias("n_terms"),
             F.coalesce("dsir_micro", F.lit(0)).alias("dsir_micro"),
-            F.when(
-                F.col("n_terms").isNotNull(),
-                # + 0.0 folds IEEE -0.0 to +0.0 (both engines), so the
-                # sign of a rounded-to-zero ratio can't break parity
-                F.round(
-                    F.col("dsir_micro") / F.lit(1000000.0) / F.col("n_terms"), 4
-                )
-                + F.lit(0.0),
-            ).alias("avg_log_ratio"),
+            # NULL (term-less doc) when the left join found no row
+            micro_mean_4dp_col(F.col("dsir_micro"), F.col("n_terms")).alias("avg_log_ratio"),
         )
     )
 
@@ -1332,8 +1299,8 @@ def corpus_lm_nll(
     integer sum of per-bigram round(-ln P * 1e6) micro-nats — integer
     summation is fold-order-independent, so the Spark partial aggregate
     and the DuckDB oracle agree exactly (the repo's dyadic-sum trick,
-    integer flavor) — and avg_nll = round(nll_micro/1e6/n_bigrams, 4)
-    (NULL when the doc has no bigrams).
+    integer flavor) — and avg_nll = micro_mean_4dp(nll_micro, n_bigrams),
+    the exact 4-dp rounding (NULL when the doc has no bigrams).
 
     Scale: one explode -> bigram-count aggregation (<= 729 rows out —
     map-side combine collapses each task to the table size), eagerly
@@ -1385,11 +1352,7 @@ def corpus_lm_nll(
             F.col(id_col),
             F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
             F.coalesce("nll_micro", F.lit(0)).alias("nll_micro"),
-            F.when(
-                F.col("n_bigrams").isNotNull(),
-                F.round(
-                    F.col("nll_micro") / F.lit(1000000.0) / F.col("n_bigrams"), 4
-                ),
-            ).alias("avg_nll"),
+            # NULL (bigram-less doc) when the left join found no row
+            micro_mean_4dp_col(F.col("nll_micro"), F.col("n_bigrams")).alias("avg_nll"),
         )
     )

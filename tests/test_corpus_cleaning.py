@@ -5,8 +5,9 @@ documents table may not exercise)."""
 
 from __future__ import annotations
 
+from nous_spark.extraction.html import extract_text_str
 from nous_spark.operators.dedup import dedup_lines_corpus
-from nous_spark.operators.text import repetition_signals
+from nous_spark.operators.text import micro_mean_4dp, repetition_signals
 
 DOC_SCHEMA = "doc_id long, text string"
 
@@ -448,11 +449,10 @@ def test_dsir_scores_separate_target_like_from_off_domain(spark):
     on = {out[1]["avg_log_ratio"], out[3]["avg_log_ratio"]}
     off = {out[2]["avg_log_ratio"], out[4]["avg_log_ratio"]}
     assert min(on) > max(off)
-    # exact-integer invariant: micro sum / 1e6 / n_terms reproduces avg
+    # exact-integer invariant: the 4-dp mean of the micro sum is avg
     for r in out.values():
         assert r["dsir_micro"] == int(r["dsir_micro"])
-        assert abs(r["avg_log_ratio"]
-                   - round(r["dsir_micro"] / 1e6 / r["n_terms"], 4)) < 1e-9
+        assert r["avg_log_ratio"] == micro_mean_4dp(r["dsir_micro"], r["n_terms"])
 
 
 def test_dsir_scores_null_and_termless_docs(spark):
@@ -613,6 +613,14 @@ HTML_CASES = [
     (8, None),
     (9, ""),
     (10, "<script>only code</script><style>only style</style>"),
+    # <head> is dropped whole; <header> is a block, not a head
+    (11, "<HEAD><title>t</title></HEAD><header>x</header>y"),
+    # html.escape's apostrophe
+    (12, "it&#x27;s"),
+    # non-ASCII / control whitespace inside lines and at line edges
+    (13, "\xa0a\u3000b\x0bc\x1cd\xa0\n\x1c\x0b e \u3000"),
+    # an inline tag inside a word becomes a space
+    (14, "Hel<b>lo</b>"),
 ]
 
 
@@ -624,18 +632,27 @@ def _spark_html(spark, rows):
 
 
 def test_html_extract_matches_python_reference(spark):
-    from nous_spark.operators.text import html_extract_py
-
+    """The Column fold of HTML_STRIP_STEPS == the pipeline's Python fold
+    (extract_text_str) on every adversarial case."""
     got = _spark_html(spark, HTML_CASES)
     assert set(got) == {d for d, _ in HTML_CASES}
     for doc_id, html in HTML_CASES:
-        text, n_lines, density = html_extract_py(html)
+        text = extract_text_str(html)
         r = got[doc_id]
+        n_lines = len(text.split("\n")) if text else 0
         assert (r["text"], r["n_lines"]) == (text, n_lines), (doc_id, r["text"])
-        if density is None:
+        if not html:
             assert r["text_density"] is None, doc_id
         else:
-            assert r["text_density"] == density, doc_id
+            assert r["text_density"] == round(len(text) / len(html), 4), doc_id
+
+
+def test_html_extract_adversarial_cases_pinned(spark):
+    got = _spark_html(spark, HTML_CASES)
+    assert got[11]["text"] == "x\ny" and got[11]["n_lines"] == 2
+    assert got[12]["text"] == "it's"
+    assert got[13]["text"] == "a b c d\ne"
+    assert got[14]["text"] == "Hel lo"
 
 
 def test_html_extract_semantics_pinned(spark):
@@ -680,6 +697,32 @@ def test_html_extract_duckdb_oracle_on_adversarial_corpus(spark):
             got[doc_id]["n_lines"],
             got[doc_id]["text_density"],
         ) == (dd[0], dd[1], d_density), doc_id
+
+
+def test_html_fold_three_executors_on_datagen_pages(spark):
+    """On datagen pages of both workload shapes (no fill / 32 fill
+    sentences), the Python, Column and DuckDB folds of HTML_STRIP_STEPS
+    agree and round-trip ``datagen.html_of`` exactly."""
+    import duckdb
+    import pandas as pd
+
+    from nous_spark.datagen import gen_row
+    from nous_spark.operators.text import html_extract_oracle_sql
+
+    pages = [gen_row(i, 1, fill)[0] for fill in (0, 32) for i in range(200)]
+    rows = [(i, p["html"].decode("utf-8")) for i, p in enumerate(pages)]
+    jvm = _spark_html(spark, rows)
+    con = duckdb.connect()
+    con.register("docs_html", pd.DataFrame(rows, columns=["doc_id", "html"]))
+    duck = dict(
+        con.execute(
+            "SELECT doc_id, text FROM ("
+            + html_extract_oracle_sql(source="SELECT doc_id, html FROM docs_html")
+            + ")"
+        ).fetchall()
+    )
+    for i, p in enumerate(pages):
+        assert extract_text_str(p["html"]) == jvm[i]["text"] == duck[i] == p["text"], i
 
 
 def test_html_extract_plan_is_zero_exchange(spark):

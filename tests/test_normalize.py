@@ -84,3 +84,31 @@ def test_canonical_url_rules():
     # idempotent
     u = canonical_url("HTTP://A.B:80/p?b=2&a=1#f")
     assert canonical_url(u) == u
+
+
+def test_py_space_chars_is_python_whitespace_in_three_engines(spark):
+    """PY_SPACE_CHARS is exactly str.isspace(), and the HTML -> text
+    whitespace step built from it turns every such character but \\n, and
+    every run of them, into one space in Java regex, DuckDB's RE2 and
+    Python re alike — checked over every non-surrogate code point."""
+    import re
+    import sys
+
+    import duckdb
+
+    from nous_spark.extraction.html import HTML_STRIP_STEPS
+
+    every = [chr(c) for c in range(sys.maxunicode + 1) if not 0xD800 <= c <= 0xDFFF]
+    assert set(N.PY_SPACE_CHARS) == {c for c in every if c.isspace()}
+    kind, pat, rep = HTML_STRIP_STEPS[-1]
+    assert (kind, rep) == ("re", " ")
+    run = N.PY_SPACE_CHARS.replace("\n", "")
+    s = "x".join(every) + f"|a{run}b  c"
+    want = "x".join(" " if c.isspace() and c != "\n" else c for c in every) + "|a b c"
+    assert re.sub(pat, rep, s) == want
+    df = spark.createDataFrame([(s,)], "s string")
+    assert df.select(F.regexp_replace("s", pat, rep).alias("r")).first()["r"] == want
+    # inlined as a SQL literal, the way html_extract_oracle_sql emits it
+    con = duckdb.connect()
+    duck = con.execute(f"SELECT regexp_replace(?, '{pat}', ' ', 'g')", [s]).fetchone()[0]
+    assert duck == want

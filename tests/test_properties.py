@@ -14,7 +14,7 @@ correctness rests on:
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from nous_spark.extraction.html import extract_text_str
@@ -430,6 +430,8 @@ def test_quality_classifier_matches_python_reference(spark, texts):
 @given(
     st.lists(st.text(alphabet="abz .7", max_size=30), min_size=1, max_size=6)
 )
+# a near-tie: the third text's mean is 7001700 micro-nats / 6 = 1.16695
+@example(texts=["aaa", "7b", "7a7z7ab", "7a7a7b7b7za"])
 @settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_corpus_lm_nll_matches_python_reference(spark, texts):
     """corpus_lm_nll == a pure-Python char-bigram LM reference (Counter
@@ -441,7 +443,7 @@ def test_corpus_lm_nll_matches_python_reference(spark, texts):
     import re as _re
     from collections import Counter
 
-    from nous_spark.operators.text import corpus_lm_nll
+    from nous_spark.operators.text import corpus_lm_nll, micro_mean_4dp
 
     rows = [(i, t) for i, t in enumerate(texts)]
 
@@ -464,7 +466,7 @@ def test_corpus_lm_nll_matches_python_reference(spark, texts):
                 round(-math.log((cnt[b] + 1) / float(pref[b[0]] + vsz)) * 1e6)
                 for b in lst
             )
-            want[i] = (len(lst), s, round(s / 1e6 / len(lst), 4))
+            want[i] = (len(lst), s, micro_mean_4dp(s, len(lst)))
 
     sdf = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
@@ -472,3 +474,13 @@ def test_corpus_lm_nll_matches_python_reference(spark, texts):
         for r in corpus_lm_nll(sdf).collect()
     }
     assert got == want
+
+
+def test_micro_mean_4dp_is_exact_on_ties():
+    """7001700 micro-nats over 6 bigrams is exactly 1.16695, which rounds
+    half away from zero to 1.167 (a double quotient gives Python 1.1669)."""
+    from nous_spark.operators.text import micro_mean_4dp
+
+    assert micro_mean_4dp(7001700, 6) == 1.167
+    assert micro_mean_4dp(-7001700, 6) == -1.167
+    assert str(micro_mean_4dp(-1, 7)) == "0.0"  # never -0.0
