@@ -17,10 +17,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nous_spark.graph import (
+    DERIVED_FROM,
+    edge_rows,
     entity_facts,
     entity_neighborhood,
     fact_refcounts,
     find_entity_by_identifier,
+    has_fact_edges,
     primary_identifier,
 )
 from nous_spark.operators.dedup import (
@@ -103,12 +106,11 @@ def _q_kg_traversal(spark: SparkSession, sf_dir: str) -> DataFrame:
     their lives_in facts (the north_star's self-join recall shape)."""
     edges = tpch_edges(spark, sf_dir)
     seg = (
-        edges.filter((F.col("edge_type") == "HAS_FACT") & (F.col("dst") == "Segment:BUILDING"))
-        .select(F.col("src").alias("entity_id"))
+        has_fact_edges(edges)
+        .filter(F.col("fact_id") == "Segment:BUILDING")
+        .select("entity_id")
     )
-    lives = edges.filter(
-        (F.col("edge_type") == "HAS_FACT") & (F.col("pred") == "lives_in")
-    ).select(F.col("src").alias("entity_id"), F.col("dst").alias("fact_id"))
+    lives = has_fact_edges(edges, "lives_in").select("entity_id", "fact_id")
     return seg.join(lives, "entity_id").select("entity_id", "fact_id")
 
 
@@ -543,11 +545,7 @@ def _q_kg_salted_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     salt never changes results: the oracle is plain DISTINCT list_agg."""
     from nous_spark.skew import salted_collect_set
 
-    hf = (
-        tpch_edges(spark, sf_dir)
-        .filter(F.col("edge_type") == "HAS_FACT")
-        .select(F.col("dst").alias("fact_id"), F.col("pred").alias("pred"))
-    )
+    hf = has_fact_edges(tpch_edges(spark, sf_dir)).select("fact_id", "pred")
     out = salted_collect_set(hf, ["fact_id"], "pred", n_salts=8, out_col="preds")
     return out.select(
         "fact_id",
@@ -610,23 +608,14 @@ def _q_kg_batch_fact_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = tpch_edges(spark, sf_dir)
     facts = tpch_facts(spark, sf_dir)
-    derived = facts.select(
-        F.col("fact_id").alias("src"),
-        F.lit("DERIVED_FROM").alias("edge_type"),
-        F.concat(F.lit("wiki:"), "fact_id").alias("dst"),
-        F.lit(None).cast("string").alias("pred"),
-        F.lit(None).cast("double").alias("confidence"),
-        F.lit(None).cast("boolean").alias("is_primary"),
-        F.lit(None).cast("timestamp").alias("created_at"),
-    )
+    derived = edge_rows(facts, DERIVED_FROM, "fact_id", F.concat(F.lit("wiki:"), "fact_id"))
     edges = edges.unionByName(derived)
     sources = facts.select(F.concat(F.lit("wiki:"), "fact_id").alias("source_id"))
     customer = _t(spark, sf_dir, "customer")
     removals = (
-        edges.filter(
-            (F.col("edge_type") == "HAS_FACT") & (F.col("dst") == "Nation:GERMANY")
-        )
-        .select(F.col("src").alias("entity_id"), F.col("dst").alias("fact_id"))
+        has_fact_edges(edges)
+        .filter(F.col("fact_id") == "Nation:GERMANY")
+        .select("entity_id", "fact_id")
         .unionByName(
             customer.filter(F.col("c_custkey") < 200).select(
                 F.concat(F.lit("cust:"), "c_custkey").alias("entity_id"),
@@ -637,12 +626,7 @@ def _q_kg_batch_fact_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = remove_facts_from_entities(
         {"edges": edges, "facts": facts, "sources": sources}, removals
     )
-    refc = (
-        out["edges"]
-        .filter(F.col("edge_type") == "HAS_FACT")
-        .groupBy(F.col("dst").alias("fact_id"))
-        .agg(F.count("*").alias("n_edges"))
-    )
+    refc = has_fact_edges(out["edges"]).groupBy("fact_id").agg(F.count("*").alias("n_edges"))
     surviving_src = out["sources"].select(
         F.expr("substring(source_id, 6)").alias("fact_id"),
         F.lit(True).alias("has_source"),
@@ -783,11 +767,7 @@ def _q_kg_rag_recall_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_vec = emb.count()  # bounded driver scalar: embeddings is a dim table
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
 
-    hf = edges.filter(F.col("edge_type") == "HAS_FACT").select(
-        F.col("src").alias("entity_id"),
-        F.col("dst").alias("fact_id"),
-        F.col("pred").alias("verb"),
-    )
+    hf = has_fact_edges(edges).select("entity_id", "fact_id", F.col("pred").alias("verb"))
     w = Window.partitionBy("entity_id").orderBy("fact_id", "verb")
     assigned = hf.withColumn("vec_id", (F.row_number().over(w) % n_vec).cast("long"))
     stale = assigned.withColumn("fact_id", F.concat(F.col("fact_id"), F.lit("#stale")))

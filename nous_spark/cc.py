@@ -29,6 +29,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# loop guardrail: diameter shrinks doubly-exponentially per round
+MAX_ITER = 20
+# the driver path's heap estimate must stay under this, or CC runs distributed
+DRIVER_MAX_BYTES = 2 * 1024**3
+
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -103,13 +108,7 @@ def _local_frame(spark: SparkSession, mapping: list[tuple[str, str]]) -> DataFra
     return spark.createDataFrame(table, "id string, component string")
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iter: int = 20,
-    checkpoint: bool = True,
-    driver_threshold: int = 2_000_000,
-    driver_max_bytes: int | None = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame, driver_threshold: int = 2_000_000) -> DataFrame:
     """edges(src, dst) -> (id, component=min id of the component).
 
     Nodes that appear only in self-loops (or not at all) are absent from
@@ -129,18 +128,11 @@ def connected_components(
     union-find builds ~2 Python strings + a tuple + ~2 dict entries per
     edge, so a near-threshold graph of wide ids can be multiple GB of
     driver heap. Estimated bytes = n_edges * (2*avg_width + 400) must
-    stay under ``driver_max_bytes`` (default ``NOUS_CC_DRIVER_MAX_BYTES``
-    or 2 GiB) or the distributed path runs instead. The row bound and
-    the strategy decision share ONE limit(threshold+1) collect job —
-    no separate count/stats job (serial job count is the pipeline's
-    non-scaling term at small corpus sizes).
+    stay under ``DRIVER_MAX_BYTES`` (2 GiB) or the distributed path runs
+    instead. The row bound and the strategy decision share ONE
+    limit(threshold+1) collect job — no separate count/stats job (serial
+    job count is the pipeline's non-scaling term at small corpus sizes).
     """
-    if driver_max_bytes is None:
-        import os
-
-        driver_max_bytes = int(
-            os.environ.get("NOUS_CC_DRIVER_MAX_BYTES", str(2 * 1024**3))
-        )
     spark = edges.sparkSession
     if driver_threshold:
         # ONE job decides the strategy AND feeds the driver path —
@@ -162,7 +154,7 @@ def connected_components(
             sample = head[: 20_000]
             avg_w = sum(len(r[0]) + len(r[1]) for r in sample) / len(sample)
             est_driver_bytes = int(len(head) * (2 * avg_w + 400))
-            if est_driver_bytes <= driver_max_bytes:
+            if est_driver_bytes <= DRIVER_MAX_BYTES:
                 pairs = [(r[0], r[1]) for r in head]
                 return _local_frame(spark, _union_find_local(pairs))
         del head  # too big for the driver — fall through to distributed
@@ -178,11 +170,10 @@ def connected_components(
 
     e0 = e  # unpersist the input cache once the loop owns checkpointed copies
     prev_sig = None
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         e = _large_star(e)
         e = _small_star(e)
-        if checkpoint:
-            e = e.localCheckpoint(eager=True)
+        e = e.localCheckpoint(eager=True)
         # fixpoint signature: (#edges, xor of hashes) — cheap, deterministic,
         # overflow-free under ANSI mode
         sig = e.agg(
@@ -195,7 +186,7 @@ def connected_components(
         prev_sig = sig
     else:
         e0.unpersist()
-        raise RuntimeError(f"connected_components: no convergence in {max_iter} iterations")
+        raise RuntimeError(f"connected_components: no convergence in {MAX_ITER} iterations")
     e0.unpersist()
 
     # After convergence every edge is (node, component_min).

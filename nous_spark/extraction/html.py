@@ -29,27 +29,36 @@ from nous_spark.normalize import PY_SPACE_CHARS
 
 _WS = PY_SPACE_CHARS.replace("\n", "")  # every str.isspace() char but "\n"
 
-# An ORDERED chain. kind "re" is a regex replace (patterns restricted to
-# the Java-regex ∩ RE2 ∩ Python-re common dialect: inline (?is) flags,
-# lazy .*?, no backreferences, no \b or \s — the three engines disagree
-# on those); kind "lit" is a literal substring replace. Ordering is
+# The common dialect of Java regex, RE2 (DuckDB) and Python re, for every
+# pattern more than one engine folds: inline (?s) only, lazy .*?, no
+# backreferences, and no (?i), \b or \s. Those three match differently per
+# engine: (?i) folds non-ASCII case variants (U+017F 'ſ' as 's', U+0131
+# 'ı' as 'i') in Python and RE2 but not in Java; \s and \b follow each
+# engine's own whitespace and word classes. So letters are spelled as
+# ASCII case classes (``ascii_ci``) and whitespace as ``ASCII_SPACE``.
+ASCII_SPACE = r"[ \t\n\f\r]"
+
+
+def ascii_ci(word: str) -> str:
+    """``word`` with each ASCII letter as a two-case class: 'li' -> '[Ll][Ii]'."""
+    return "".join(f"[{c.upper()}{c.lower()}]" if c.isascii() and c.isalpha() else c for c in word)
+
+
+# An ORDERED chain. kind "re" is a regex replace in the common dialect
+# above; kind "lit" is a literal substring replace. Ordering is
 # load-bearing: script/style/comment/head blocks go first (their CONTENT
 # must never leak into text), block-close tags become newlines BEFORE
 # the generic tag strip erases them, and entity unescapes run after the
 # tags with &amp; last, so double-encoded '&amp;lt;' decodes to '&lt;',
 # not '<'. The <head> pattern must not match <header>.
+_BLOCKS = "p|div|h[1-6]|li|ul|ol|tr|table|blockquote|section|article|header|footer"
 HTML_STRIP_STEPS: tuple[tuple[str, str, str], ...] = (
-    ("re", r"(?is)<script[^>]*>.*?</script>", " "),
-    ("re", r"(?is)<style[^>]*>.*?</style>", " "),
+    ("re", rf"(?s)<{ascii_ci('script')}[^>]*>.*?</{ascii_ci('script')}>", " "),
+    ("re", rf"(?s)<{ascii_ci('style')}[^>]*>.*?</{ascii_ci('style')}>", " "),
     ("re", r"(?s)<!--.*?-->", " "),
-    ("re", r"(?is)<head(?:[ \t\r\n/][^>]*)?>.*?</head>", " "),
-    ("re", r"(?is)<(?:br|hr)[^>]*>", "\n"),
-    (
-        "re",
-        r"(?is)</(?:p|div|h[1-6]|li|ul|ol|tr|table|blockquote|section|article"
-        r"|header|footer)>",
-        "\n",
-    ),
+    ("re", rf"(?s)<{ascii_ci('head')}(?:[ \t\r\n/][^>]*)?>.*?</{ascii_ci('head')}>", " "),
+    ("re", f"<(?:{ascii_ci('br|hr')})[^>]*>", "\n"),
+    ("re", f"</(?:{ascii_ci(_BLOCKS)})>", "\n"),
     ("re", r"<[^>]*>", " "),
     ("lit", "&lt;", "<"),
     ("lit", "&gt;", ">"),

@@ -3,6 +3,8 @@
 Reproduces the reference's 4-node / 3-edge property graph
 (docs/graph_db_schema.md:7) and its query semantics as DataFrame ops:
 
+  * edge_rows / has_fact_edges — the one writer and the one HAS_FACT
+    reader of the ``schemas.EDGES`` layout;
   * build_entity_tables / build_fact_tables — linked mentions/triples ->
     the five tables;
   * idempotent_append — dedup + anti-join before every write (the batch
@@ -25,12 +27,88 @@ as one row per map task. Only aggregates Spark cannot pre-aggregate
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from nous_spark import schemas
 
 HAS_IDENTIFIER = "HAS_IDENTIFIER"
 HAS_FACT = "HAS_FACT"
 DERIVED_FROM = "DERIVED_FROM"
+
+
+# --------------------------------------------------------------------------
+# edge rows: the one place the schemas.EDGES layout is spelled out
+# --------------------------------------------------------------------------
+def edge_rows(
+    df: DataFrame, edge_type: str, src: str | Column, dst: str | Column, **props: str | Column
+) -> DataFrame:
+    """``df`` -> ``schemas.EDGES`` rows of one edge type, columns in order.
+
+    ``props`` sets the type-specific columns (pred, confidence,
+    is_primary, created_at) by name; each one not passed is a NULL of
+    its ``schemas.EDGES`` type. Every edge row in the engine (build,
+    compaction, the TPC-H graph) comes from here."""
+    cols = {"src": src, "edge_type": F.lit(edge_type), "dst": dst, **props}
+    unknown = set(cols) - set(schemas.EDGES.names)
+    if unknown:
+        raise ValueError(f"not an edge column: {sorted(unknown)}")
+    out = []
+    for f in schemas.EDGES:
+        c = cols.get(f.name, F.lit(None).cast(f.dataType))
+        out.append((F.col(c) if isinstance(c, str) else c).alias(f.name))
+    return df.select(*out)
+
+
+# Edge merges are AGGREGATING, not row-picking: duplicates of one edge
+# key differ in created_at (many pages assert the same edge), and
+# dropDuplicates keeps an arbitrary row — nondeterministic across
+# runs/parallelism, which breaks the resume/byte-identity contract.
+# Deterministic merge instead: earliest timestamp (the reference's
+# idempotent create keeps the first edge, age_repository.py:101-123),
+# max confidence, ever-primary wins. One merge per edge type, shared by
+# the build (``ts`` = the mentions'/triples' warc_ts) and by compaction
+# (``ts`` = the written edges' created_at). max/min only, so Spark
+# pre-aggregates per map task before the one exchange: a hot entity
+# reaches its reducer as one row per map task. That partial aggregate is
+# the skew handling; a salt would only add an exchange (plan pinned in
+# tests/test_graph_semantics.py).
+def _merge_has_identifier(rows: DataFrame, ts: str) -> DataFrame:
+    """(src, dst, is_primary, ts) -> one HAS_IDENTIFIER edge per (src, dst)."""
+    merged = rows.groupBy("src", "dst").agg(
+        F.max("is_primary").alias("is_primary"), F.min(ts).alias("created_at")
+    )
+    return edge_rows(
+        merged, HAS_IDENTIFIER, "src", "dst", is_primary="is_primary", created_at="created_at"
+    )
+
+
+def _merge_has_fact(rows: DataFrame, ts: str) -> DataFrame:
+    """(src, dst, pred, confidence, ts) -> one HAS_FACT edge per (src, dst, pred)."""
+    merged = rows.groupBy("src", "dst", "pred").agg(
+        F.max("confidence").alias("confidence"), F.min(ts).alias("created_at")
+    )
+    return edge_rows(
+        merged,
+        HAS_FACT,
+        "src",
+        "dst",
+        pred="pred",
+        confidence="confidence",
+        created_at="created_at",
+    )
+
+
+def has_fact_edges(edges: DataFrame, pred: str | None = None) -> DataFrame:
+    """The HAS_FACT view every reader goes through: (entity_id, fact_id,
+    pred, confidence), optionally one predicate only. Readers select the
+    columns they need; column pruning drops the rest at the scan."""
+    hf = edges.filter(F.col("edge_type") == HAS_FACT)
+    if pred is not None:
+        hf = hf.filter(F.col("pred") == pred)
+    return hf.select(
+        F.col("src").alias("entity_id"), F.col("dst").alias("fact_id"), "pred", "confidence"
+    )
 
 
 # --------------------------------------------------------------------------
@@ -99,72 +177,34 @@ def build_fact_tables(
         )
     )
 
-    # Edge dedup is AGGREGATING, not row-picking: duplicates of one edge
-    # key differ in created_at (many pages assert the same edge), and
-    # dropDuplicates keeps an arbitrary row — nondeterministic across
-    # runs/parallelism, which breaks the resume/byte-identity contract.
-    # Deterministic merge instead: earliest created_at (the reference's
-    # idempotent create keeps the first edge, age_repository.py:101-123),
-    # max confidence, ever-primary wins.
-    has_identifier = (
-        linked_mentions.groupBy(
+    has_identifier = _merge_has_identifier(
+        linked_mentions.select(
             F.col("entity_id").alias("src"),
             F.concat_ws(":", "id_type", "id_value").alias("dst"),
-        )
-        .agg(
-            F.max(F.col("mention_rank") == 0).alias("is_primary"),
-            F.min("warc_ts").alias("created_at"),
-        )
-        .select(
-            "src",
-            F.lit(HAS_IDENTIFIER).alias("edge_type"),
-            "dst",
-            F.lit(None).cast("string").alias("pred"),
-            F.lit(None).cast("double").alias("confidence"),
-            "is_primary",
-            "created_at",
-        )
+            (F.col("mention_rank") == 0).alias("is_primary"),
+            "warc_ts",
+        ),
+        ts="warc_ts",
     )
-
-    # max/min only, so Spark pre-aggregates per map task before the one
-    # exchange: a hot entity reaches its reducer as one row per map task.
-    # That partial aggregate is the skew handling; a salt would only add
-    # an exchange (plan pinned in tests/test_graph_semantics.py).
-    hf_merged = linked_triples.groupBy(
-        F.col("entity_id").alias("src"), F.col("fact_id").alias("dst"), "pred"
-    ).agg(
-        F.max("confidence").alias("confidence"),
-        F.min("warc_ts").alias("created_at"),
-    )
-    has_fact = (
-        hf_merged
-        .select(
-            "src",
-            F.lit(HAS_FACT).alias("edge_type"),
-            "dst",
+    has_fact = _merge_has_fact(
+        linked_triples.select(
+            F.col("entity_id").alias("src"),
+            F.col("fact_id").alias("dst"),
             "pred",
             "confidence",
-            F.lit(None).cast("boolean").alias("is_primary"),
-            "created_at",
-        )
+            "warc_ts",
+        ),
+        ts="warc_ts",
     )
-
-    derived_from = (
+    derived_from = edge_rows(
         linked_triples.groupBy(
             F.col("fact_id").alias("src"), F.col("source_url").alias("dst")
-        )
-        .agg(F.min("warc_ts").alias("created_at"))
-        .select(
-            "src",
-            F.lit(DERIVED_FROM).alias("edge_type"),
-            "dst",
-            F.lit(None).cast("string").alias("pred"),
-            F.lit(None).cast("double").alias("confidence"),
-            F.lit(None).cast("boolean").alias("is_primary"),
-            "created_at",
-        )
+        ).agg(F.min("warc_ts").alias("created_at")),
+        DERIVED_FROM,
+        "src",
+        "dst",
+        created_at="created_at",
     )
-
     edges = has_identifier.unionByName(has_fact).unionByName(derived_from)
     return {"facts": facts, "sources": sources, "edges": edges}
 
@@ -220,16 +260,8 @@ def entity_facts(
     static broadcast hint would OOM at web scale; the entity-filtered
     probe side is tiny, and AQE broadcasts whichever side is actually
     small at runtime."""
-    hf = edges.filter(F.col("edge_type") == HAS_FACT).select(
-        F.col("src").alias("entity_id"),
-        F.col("dst").alias("fact_id"),
-        "pred",
-        "confidence",
-    )
-    if pred is not None:
-        hf = hf.filter(F.col("pred") == pred)
     return (
-        entity_ids.join(hf, "entity_id", "inner")
+        entity_ids.join(has_fact_edges(edges, pred), "entity_id", "inner")
         .join(facts, "fact_id", "inner")
         .select("entity_id", "pred", "fact_id", "name", "fact_type", "confidence")
     )
@@ -247,14 +279,7 @@ def entity_neighborhood(
     (fact, source). Entities with zero facts still return one row
     (left joins — C2/C3)."""
     e = find_entity_by_identifier(edges, id_type, id_value)
-    hf = edges.filter(F.col("edge_type") == HAS_FACT).select(
-        F.col("src").alias("entity_id"),
-        F.col("dst").alias("fact_id"),
-        "pred",
-        "confidence",
-    )
-    if pred is not None:
-        hf = hf.filter(F.col("pred") == pred)
+    hf = has_fact_edges(edges, pred)
     df_edges = edges.filter(F.col("edge_type") == DERIVED_FROM).select(
         F.col("src").alias("fact_id"), F.col("dst").alias("source_id")
     )
@@ -341,34 +366,10 @@ def recanonicalize_graph(
 
     # DERIVED_FROM srcs are fact ids — only entity-headed edges remap
     entity_edges = remap(edges.filter(F.col("edge_type") != DERIVED_FROM), "src")
-    hi2 = (
-        entity_edges.filter(F.col("edge_type") == HAS_IDENTIFIER)
-        .groupBy("src", "dst")
-        .agg(F.max("is_primary").alias("is_primary"), F.min("created_at").alias("created_at"))
-        .select(
-            "src",
-            F.lit(HAS_IDENTIFIER).alias("edge_type"),
-            "dst",
-            F.lit(None).cast("string").alias("pred"),
-            F.lit(None).cast("double").alias("confidence"),
-            "is_primary",
-            "created_at",
-        )
+    hi2 = _merge_has_identifier(
+        entity_edges.filter(F.col("edge_type") == HAS_IDENTIFIER), ts="created_at"
     )
-    hf2 = (
-        entity_edges.filter(F.col("edge_type") == HAS_FACT)
-        .groupBy("src", "dst", "pred")
-        .agg(F.max("confidence").alias("confidence"), F.min("created_at").alias("created_at"))
-        .select(
-            "src",
-            F.lit(HAS_FACT).alias("edge_type"),
-            "dst",
-            "pred",
-            "confidence",
-            F.lit(None).cast("boolean").alias("is_primary"),
-            "created_at",
-        )
-    )
+    hf2 = _merge_has_fact(entity_edges.filter(F.col("edge_type") == HAS_FACT), ts="created_at")
     new_edges = hi2.unionByName(hf2).unionByName(
         edges.filter(F.col("edge_type") == DERIVED_FROM)
     )
@@ -402,9 +403,7 @@ def expand_hops(edges: DataFrame, entity_ids: DataFrame, hops: int = 1) -> DataF
     visited set. Hot facts fan in massively at web scale: the fact->entity
     join is exactly the skew-join AQE case (session.py enables it).
     """
-    hf = edges.filter(F.col("edge_type") == HAS_FACT).select(
-        F.col("src").alias("entity_id"), F.col("dst").alias("fact_id")
-    )
+    hf = has_fact_edges(edges).select("entity_id", "fact_id")
     visited = entity_ids.select("entity_id").dropDuplicates(["entity_id"]).withColumn(
         "depth", F.lit(0)
     )
@@ -429,9 +428,9 @@ def expand_hops(edges: DataFrame, entity_ids: DataFrame, hops: int = 1) -> DataF
 def fact_refcounts(edges: DataFrame) -> DataFrame:
     """fact_id -> number of distinct entities asserting it (D2/C4)."""
     return (
-        edges.filter(F.col("edge_type") == HAS_FACT)
-        .groupBy(F.col("dst").alias("fact_id"))
-        .agg(F.countDistinct("src").alias("n_entities"))
+        has_fact_edges(edges)
+        .groupBy("fact_id")
+        .agg(F.countDistinct("entity_id").alias("n_entities"))
     )
 
 
@@ -444,14 +443,14 @@ def delete_entity(tables: dict[str, DataFrame], entity_id: str) -> dict[str, Dat
     sources, identifiers = tables["sources"], tables["identifiers"]
 
     doomed_facts = (
-        edges.filter((F.col("edge_type") == HAS_FACT))
-        .groupBy("dst")
+        has_fact_edges(edges)
+        .groupBy("fact_id")
         .agg(
-            F.sum(F.when(F.col("src") == entity_id, 1).otherwise(0)).alias("mine"),
-            F.sum(F.when(F.col("src") != entity_id, 1).otherwise(0)).alias("others"),
+            F.sum(F.when(F.col("entity_id") == entity_id, 1).otherwise(0)).alias("mine"),
+            F.sum(F.when(F.col("entity_id") != entity_id, 1).otherwise(0)).alias("others"),
         )
         .filter((F.col("mine") > 0) & (F.col("others") == 0))
-        .select(F.col("dst").alias("fact_id"))
+        .select("fact_id")
     )
 
     new_edges = edges.filter(F.col("src") != entity_id).join(
@@ -521,13 +520,7 @@ def remove_facts_from_entities(
     orphaned = (
         rm.select("fact_id")
         .dropDuplicates(["fact_id"])
-        .join(
-            new_edges.filter(F.col("edge_type") == HAS_FACT).select(
-                F.col("dst").alias("fact_id")
-            ),
-            "fact_id",
-            "left_anti",
-        )
+        .join(has_fact_edges(new_edges).select("fact_id"), "fact_id", "left_anti")
     )
     new_edges = new_edges.join(
         orphaned,

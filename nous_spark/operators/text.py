@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from nous_spark.extraction.html import HTML_STRIP_STEPS
+from nous_spark.extraction.html import ASCII_SPACE, HTML_STRIP_STEPS, ascii_ci
 
 # ---------------------------------------------------------------- counting
 def token_count_col(text: Column) -> Column:
@@ -836,12 +836,15 @@ def html_extract_oracle_sql(
 
 
 # ----------------------------------------------------------- HTML -> links
-# Lexical link rule (Java-regex ∩ RE2 ∩ Python-re): a double-quoted href
-# anywhere in the <a ...> attribute list, lazy anchor body across
-# newlines. Single-quoted/unquoted hrefs are deliberately NOT matched —
-# the rule is a deterministic lexical spec shared by all three engines,
-# not a DOM parser (same stance as HTML_STRIP_STEPS).
-_HTML_LINK_RE = r'(?is)<a\s[^>]*href\s*=\s*"([^"]*)"[^>]*>(.*?)</a>'
+# Lexical link rule (the common regex dialect of extraction/html.py): a
+# double-quoted href anywhere in the <a ...> attribute list, lazy anchor
+# body across newlines. Single-quoted/unquoted hrefs are deliberately NOT
+# matched — the rule is a deterministic lexical spec shared by all three
+# engines, not a DOM parser (same stance as HTML_STRIP_STEPS).
+_HTML_LINK_RE = (
+    f"(?s)<{ascii_ci('a')}{ASCII_SPACE}[^>]*{ascii_ci('href')}{ASCII_SPACE}*={ASCII_SPACE}*"
+    f'"([^"]*)"[^>]*>(.*?)</{ascii_ci("a")}>'
+)
 
 # Anchor/href cleanup: the entity-unescape tail of HTML_STRIP_STEPS (same
 # ordering invariant: &amp; last), plus inner-tag strip and horizontal

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nous_spark.graph import HAS_FACT, HAS_IDENTIFIER, edge_rows
+
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -33,36 +35,28 @@ def tpch_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load(spark, sf_dir, "nation")
 
     entity = F.concat(F.lit("cust:"), F.col("c_custkey"))
-    null_ts = F.lit(None).cast("timestamp").alias("created_at")
-    has_identifier = customer.select(
-        entity.alias("src"),
-        F.lit("HAS_IDENTIFIER").alias("edge_type"),
-        F.concat(F.lit("username:"), F.col("c_name")).alias("dst"),
-        F.lit(None).cast("string").alias("pred"),
-        F.lit(None).cast("double").alias("confidence"),
-        F.lit(True).alias("is_primary"),
-        null_ts,
+    has_identifier = edge_rows(
+        customer,
+        HAS_IDENTIFIER,
+        entity,
+        F.concat(F.lit("username:"), F.col("c_name")),
+        is_primary=F.lit(True),
     )
-    lives_in = (
-        customer.join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .select(
-            entity.alias("src"),
-            F.lit("HAS_FACT").alias("edge_type"),
-            F.concat(F.lit("Nation:"), F.col("n_name")).alias("dst"),
-            F.lit("lives_in").alias("pred"),
-            F.lit(1.0).alias("confidence"),
-            F.lit(None).cast("boolean").alias("is_primary"),
-            null_ts,
-        )
+    lives_in = edge_rows(
+        customer.join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey),
+        HAS_FACT,
+        entity,
+        F.concat(F.lit("Nation:"), F.col("n_name")),
+        pred=F.lit("lives_in"),
+        confidence=F.lit(1.0),
     )
-    has_segment = customer.select(
-        entity.alias("src"),
-        F.lit("HAS_FACT").alias("edge_type"),
-        F.concat(F.lit("Segment:"), F.col("c_mktsegment")).alias("dst"),
-        F.lit("has_segment").alias("pred"),
-        F.lit(1.0).alias("confidence"),
-        F.lit(None).cast("boolean").alias("is_primary"),
-        null_ts,
+    has_segment = edge_rows(
+        customer,
+        HAS_FACT,
+        entity,
+        F.concat(F.lit("Segment:"), F.col("c_mktsegment")),
+        pred=F.lit("has_segment"),
+        confidence=F.lit(1.0),
     )
     return has_identifier.unionByName(lives_in).unionByName(has_segment)
 

@@ -48,6 +48,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from nous_spark.extraction.html import ASCII_SPACE, ascii_ci
+
 from .text import (
     _HTML_LINK_RE,
     _LINK_ENTITY_STEPS,
@@ -473,20 +475,24 @@ def link_quality_signals_oracle_sql(
 
 
 # ------------------------------------------------ robots meta gate
-# Lexical rule (Java-regex ∩ RE2 ∩ Python-re ∩ DuckDB-RE2, same stance
-# as _HTML_LINK_RE): a <meta ...> tag carrying a name=robots attribute,
-# double-quoted, single-quoted or unquoted, case-insensitive. ``name``
-# must start an attribute (after whitespace or a closing quote), so
-# data-name="robots" is not read, and the value must be exactly robots.
-# Directive tokens (noindex/nofollow/none, word-bounded) are searched in
-# the raw tag text, so attribute order (content before name) doesn't
-# matter and 'none' implies both per the robots spec.
+# Lexical rule (the common regex dialect of extraction/html.py, same
+# stance as _HTML_LINK_RE): a <meta ...> tag carrying a name=robots
+# attribute, double-quoted, single-quoted or unquoted, ASCII
+# case-insensitive. ``name`` must start an attribute (after whitespace or
+# a closing quote), so data-name="robots" is not read, and the value must
+# be exactly robots. Directive tokens (noindex/nofollow/none, bounded by
+# non-word characters) are searched in the raw tag text, so attribute
+# order (content before name) doesn't matter and 'none' implies both per
+# the robots spec.
+_ROBOTS = ascii_ci("robots")
 _ROBOTS_META_RE = (
-    r"""(?is)<meta\s(?:[^>]*[\s"'])?name\s*=\s*(?:"robots"|'robots'|robots)"""
-    r"""(?:[\s"'/][^>]*)?>"""
+    rf"""<{ascii_ci("meta")}{ASCII_SPACE}(?:[^>]*[ \t\n\f\r"'])?{ascii_ci("name")}"""
+    rf"""{ASCII_SPACE}*={ASCII_SPACE}*(?:"{_ROBOTS}"|'{_ROBOTS}'|{_ROBOTS})"""
+    r"""(?:[ \t\n\f\r"'/][^>]*)?>"""
 )
-_NOINDEX_RE = r"(?i)\b(noindex|none)\b"
-_NOFOLLOW_RE = r"(?i)\b(nofollow|none)\b"
+_NOT_WORD = "[^A-Za-z0-9_]"
+_NOINDEX_RE = f"(?:^|{_NOT_WORD})(?:{ascii_ci('noindex|none')})(?:{_NOT_WORD}|$)"
+_NOFOLLOW_RE = f"(?:^|{_NOT_WORD})(?:{ascii_ci('nofollow|none')})(?:{_NOT_WORD}|$)"
 
 
 def robots_meta(

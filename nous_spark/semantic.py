@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from nous_spark.graph import HAS_FACT, find_entity_by_identifier
+from nous_spark.graph import find_entity_by_identifier, has_fact_edges
 from nous_spark.normalize import POINT_NS, point_id_for, synthetic_sentence_col, uuid5_col
 from nous_spark.schemas import EMBEDDING_DIM
 
@@ -102,11 +102,7 @@ def build_embeddings(
     crash appends nothing new once deduped on point_id — the same
     contract as the reference's deterministic Qdrant upsert.
     """
-    hf = edges.filter(F.col("edge_type") == HAS_FACT).select(
-        F.col("src").alias("entity_id"),
-        F.col("dst").alias("fact_id"),
-        F.col("pred").alias("verb"),
-    )
+    hf = has_fact_edges(edges).select("entity_id", "fact_id", F.col("pred").alias("verb"))
     with_fact = hf.join(facts, "fact_id")  # size decided by AQE (module note)
     sent = synthetic_sentence_col(F.col("verb"), F.col("fact_type"), F.col("name"))
     # normalize.point_id_for's key, minted JVM-side (qdrant_repository.py:63-78)
@@ -183,9 +179,9 @@ def _recall_verified(
     )
 
     graph_facts = (
-        edges.filter(F.col("edge_type") == HAS_FACT)
-        .join(ent, edges.src == ent.entity_id, "left_semi")
-        .select(F.col("src").alias("entity_id"), F.col("dst").alias("fact_id"))
+        has_fact_edges(edges)
+        .join(ent, "entity_id", "left_semi")
+        .select("entity_id", "fact_id")
         .dropDuplicates(["entity_id", "fact_id"])
     )
     verified = (
@@ -388,12 +384,7 @@ def summarize_entities(
     Returns (entity_id, n_facts, summary).
     """
     tpl = _templates(lang)
-    hf = edges.filter(F.col("edge_type") == HAS_FACT).select(
-        F.col("src").alias("entity_id"),
-        F.col("dst").alias("fact_id"),
-        "pred",
-        "confidence",
-    )
+    hf = has_fact_edges(edges)
     qualifier = (
         F.when(F.col("confidence") >= 0.9, F.lit(""))
         .when(F.col("confidence") >= 0.7, F.lit(tpl["likely"]))

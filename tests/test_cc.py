@@ -68,3 +68,19 @@ def test_driver_path_result_is_a_local_relation(spark):
         df = spark.createDataFrame(edges, "src string, dst string")
         plan = connected_components(df)._jdf.queryExecution().analyzed().toString()
         assert plan.startswith("LocalRelation"), plan
+
+
+def test_byte_guard_sends_small_graph_to_distributed_path(spark, monkeypatch):
+    """Under the row threshold but over DRIVER_MAX_BYTES the graph runs
+    distributed (its result is then no LocalRelation) and still equals
+    the driver path's answer."""
+    import nous_spark.cc as cc
+
+    edges = [("b", "a"), ("c", "b"), ("e", "d"), ("f", "f")]
+    driver = _components(spark, edges)
+    monkeypatch.setattr(cc, "DRIVER_MAX_BYTES", 1)
+    df = spark.createDataFrame(edges, "src string, dst string")
+    out = connected_components(df)
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert not plan.startswith("LocalRelation"), plan
+    assert {r["id"]: r["component"] for r in out.collect()} == driver

@@ -105,3 +105,34 @@ def test_compaction_noop_without_shared_identifiers(spark, tmp_path):
     out = recanonicalize_graph(tables)
     assert out["edges"].exceptAll(tables["edges"]).count() == 0
     assert out["edges"].count() == tables["edges"].count()
+
+
+def test_compaction_equals_single_batch_build(spark, tmp_path):
+    """Two batches + recanonicalize_graph == one batch of the same pages:
+    compaction re-merges edges with the build's own merge rule, so the
+    edges tables are equal and the nodes agree on (entity_id, created_at)."""
+    from nous_spark.normalize import entity_id_for
+
+    # the pages of test_cross_batch_alias_split_then_compact
+    email_id, user_id = "email:ada@x.com", "username:ada_l"
+    if entity_id_for("email", "ada@x.com") < entity_id_for("username", "ada_l"):
+        first, second = user_id, email_id
+    else:
+        first, second = email_id, user_id
+    b1 = [("u1", f"Identity: {first}\nAda lives in Paris.")]
+    b2 = [
+        ("u2", f"Identity: {second}\nAda works as a Programmer at Babbage."),
+        ("u3", f"Identity: {email_id}\nIdentity: {user_id}\nProfile page."),
+    ]
+    split, whole = str(tmp_path / "split"), str(tmp_path / "whole")
+    assimilate_batch(_pages(spark, b1), split)
+    assimilate_batch(_pages(spark, b2), split)
+    assimilate_batch(_pages(spark, b1 + b2), whole)
+
+    compacted = recanonicalize_graph(_load(spark, split))
+    single = _load(spark, whole)
+    a, b = compacted["edges"], single["edges"]
+    assert a.count() > 0
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    a, b = (t["nodes"].select("entity_id", "created_at") for t in (compacted, single))
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0

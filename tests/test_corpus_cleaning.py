@@ -621,6 +621,10 @@ HTML_CASES = [
     (13, "\xa0a\u3000b\x0bc\x1cd\xa0\n\x1c\x0b e \u3000"),
     # an inline tag inside a word becomes a space
     (14, "Hel<b>lo</b>"),
+    # non-ASCII case variants of tag names (U+017F, U+0131) are not the
+    # tag: tag names match ASCII case classes in all three engines
+    (15, "<\u017fcript>x</script>y"),
+    (16, "<l\u0131>a</l\u0131>b"),
 ]
 
 
@@ -653,6 +657,8 @@ def test_html_extract_adversarial_cases_pinned(spark):
     assert got[12]["text"] == "it's"
     assert got[13]["text"] == "a b c d\ne"
     assert got[14]["text"] == "Hel lo"
+    assert got[15]["text"] == "x y"
+    assert got[16]["text"] == "a b"
 
 
 def test_html_extract_semantics_pinned(spark):
@@ -751,6 +757,11 @@ LINK_CASES = [
     (5, ""),
     # anchor is only an inner tag -> cleans to ''
     (6, '<a href="https://c.com" title="t">img only <img src="i.png"/></a>'),
+    # separators outside [ \t\n\f\r] (VT, NBSP, FS) are not whitespace
+    # to the link rule in any engine: no rows
+    (7, '<a\x0bhref="u">v</a>'),
+    (8, '<a\xa0href="u">v</a>'),
+    (9, '<a\x1chref="u">v</a>'),
 ]
 
 

@@ -312,3 +312,35 @@ def test_has_fact_merge_hot_key_equals_python_fold(spark, hot_triples):
     }
     assert len(want) == 501
     assert got == want
+
+
+# --------------------------------------------------------------------------
+# edge layout: every edge producer emits exactly schemas.EDGES
+# --------------------------------------------------------------------------
+def test_every_edge_producer_emits_the_edges_layout(
+    spark, fixture_tables, hot_triples, tmp_path
+):
+    from nous_spark import schemas
+    from nous_spark.graph import recanonicalize_graph
+    from nous_spark.operators.tpch_graph import tpch_edges
+
+    want = [(f.name, f.dataType) for f in schemas.EDGES]
+    sf_dir = str(tmp_path)
+    spark.createDataFrame(
+        [(1, "Customer#1", 7, "BUILDING")],
+        "c_custkey long, c_name string, c_nationkey long, c_mktsegment string",
+    ).write.parquet(f"{sf_dir}/customer.parquet")
+    spark.createDataFrame([(7, "GERMANY")], "n_nationkey long, n_name string").write.parquet(
+        f"{sf_dir}/nation.parquet"
+    )
+    linked = spark.createDataFrame(hot_triples[:10], LINKED_SCHEMA)
+    mentions = spark.createDataFrame(
+        [("u0", 0, "email", "hot@x.com", "eHot", TS)], MENTIONS_SCHEMA
+    )
+    producers = {
+        "build": build_fact_tables(linked, mentions)["edges"],
+        "compaction": recanonicalize_graph(fixture_tables)["edges"],
+        "tpch": tpch_edges(spark, sf_dir),
+    }
+    for name, edges in producers.items():
+        assert [(f.name, f.dataType) for f in edges.schema] == want, name

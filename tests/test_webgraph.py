@@ -247,6 +247,10 @@ ROBOTS_CASES = [
     # only starts with 'robots'
     (12, '<head><meta data-name="robots" content="noindex"></head>'),
     (13, "<meta name=robotsx content=noindex><meta name='robots-x' content=none>"),
+    # ASCII-only matching: U+0131 in 'noindex' and a VT separator after
+    # <meta are read the same way by all three engines
+    (14, '<meta name="robots" content="no\u0131ndex">'),
+    (15, '<meta\x0bname="robots" content="noindex">'),
 ]
 
 
@@ -272,6 +276,8 @@ def test_robots_meta_matches_python_reference(spark):
     assert got[11] == (True, True)     # unquoted, content first
     assert got[12] == (False, False)   # data-name decoy
     assert got[13] == (False, False)   # robots-prefixed values
+    assert got[14] == (False, False)   # dotless i is not 'i'
+    assert got[15] == (False, False)   # VT is not a tag separator
 
 
 def test_robots_meta_duckdb_oracle_on_adversarial_corpus(spark):
